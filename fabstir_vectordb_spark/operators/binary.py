@@ -32,11 +32,11 @@ Distances are integers (no rounding discipline needed anywhere); ties
 break on id exactly like every other kNN path in the package.
 
 Scale shape: encode is one Arrow-batched map pass (the PQ-encode
-pattern); point search broadcasts the collected query signatures into a
-partial-top-k kernel (<= k rows per partition per query cross the
-shuffle); bulk search is the cogrouped block kernel of knn_bulk /
-adc_knn_bulk.  No reference counterpart (vector_ops.rs has scalar u8 +
-PQ only); extension-axis.
+pattern); search is ``HammingScorer`` over operators/scan.py's
+deliveries — broadcast for the point path, hash-block cogroup for the
+bulk path (<= k rows per block per query cross the shuffle).  No
+reference counterpart (vector_ops.rs has scalar u8 + PQ only);
+extension-axis.
 """
 
 from __future__ import annotations
@@ -45,10 +45,17 @@ import json
 import os
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from fabstir_vectordb_spark.operators.scan import (
+    Scorer,
+    broadcast_scan,
+    exact_rerank,
+    hash_block_scan,
+    matrix,
+)
 
 __all__ = ["BinarySketch"]
 
@@ -83,6 +90,26 @@ def _pack_words(
     ).astype(np.uint32)
 
 
+class HammingScorer(Scorer):
+    """xor + popcount over packed sign words for operators/scan.py;
+    queries are signed with the same ``_pack_words`` as the corpus."""
+
+    integer = True
+
+    def __init__(self, planes: np.ndarray, scale: int):
+        self.planes, self.scale = planes, scale
+
+    def decode(self, arr):
+        return matrix(arr, np.uint32)
+
+    def prepare(self, Q, blk=None):
+        return _pack_words(Q, self.planes, self.scale)
+
+    def scan(self, W, Qw, k):
+        for j in range(len(Qw)):
+            yield j, None, _popcount(np.bitwise_xor(W, Qw[j][None, :]))
+
+
 class BinarySketch:
     """``planes``: (bits, dim) int8 matrix of +-1 hyperplane signs."""
 
@@ -108,10 +135,6 @@ class BinarySketch:
         return cls(planes, scale=scale)
 
     # ----------------------------------------------------------- encode
-
-    def _sign_words(self, V: np.ndarray) -> np.ndarray:
-        """(n, dim) floats -> (n, W) uint32 packed sign words."""
-        return _pack_words(V, self.planes, self.scale)
 
     def encode(
         self, df: DataFrame, vector_col: str = "embedding", sig_col: str = "sig"
@@ -153,82 +176,24 @@ class BinarySketch:
         rerank_vector_col: str = "embedding",
         oversample: int | None = None,
     ) -> DataFrame:
-        """Top-k by Hamming distance over the signature table (query set
-        collected, the adc_knn pattern).  With ``rerank_vectors`` the
-        Hamming scan over-fetches k*oversample and exact float L2
-        re-ranks — coarse integer scan, exact math on the shortlist.
-        ``oversample=None`` consumes the planner default
+        """Top-k by Hamming distance over the signature table, query set
+        collected and broadcast (scan.broadcast_scan).  With
+        ``rerank_vectors`` the Hamming scan over-fetches k*oversample
+        and exact float L2 re-ranks — coarse integer scan, exact math on
+        the shortlist.  ``oversample=None`` consumes the planner default
         (plans/tuning.tune_binary — 4, the certified depth)."""
-        from fabstir_vectordb_spark.operators.pq import exact_rerank
-        from fabstir_vectordb_spark.operators.topk import topk_per_query
-
-        if oversample is None:
-            from fabstir_vectordb_spark.plans.tuning import tune_binary
-
-            oversample = tune_binary(self.dim, k).oversample
-
-        if rerank_vectors is not None:
-            cand = self.hamming_knn(
-                sigs, queries, k * oversample,
-                id_col=id_col, sig_col=sig_col,
-                query_id_col=query_id_col, query_vector_col=query_vector_col,
-            )
-            return exact_rerank(
-                cand, queries, rerank_vectors, k,
-                id_col=id_col, rerank_vector_col=rerank_vector_col,
-                query_id_col=query_id_col, query_vector_col=query_vector_col,
-            )
-
-        spark = sigs.sparkSession
-        out_schema = T.StructType(
-            [
-                T.StructField("query_id", queries.schema[query_id_col].dataType, False),
-                T.StructField("id", sigs.schema[id_col].dataType, False),
-                T.StructField("distance", T.LongType(), False),
-            ]
-        )
+        fetch = k * self._oversample(oversample, k) if rerank_vectors is not None else k
         qrows = queries.select(query_id_col, query_vector_col).collect()
-        if not qrows:  # 0-row matmul has no shape — and no work either
-            return spark.createDataFrame([], out_schema)
-        qids = [r[0] for r in qrows]
-        Q = self._sign_words(
-            np.asarray([np.asarray(r[1], dtype=np.float64) for r in qrows])
+        rows = sigs.select(F.col(id_col).alias("id"), F.col(sig_col).alias("__v"))
+        cand = broadcast_scan(
+            rows, self.scorer(), fetch, qrows,
+            queries.schema[query_id_col].dataType,
         )
-        bc = spark.sparkContext.broadcast((qids, Q))
-
-        def kernel(batches):
-            qids_l, Qw = bc.value
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                Vw = np.asarray(
-                    [np.asarray(s, dtype=np.uint32) for s in pdf[sig_col]]
-                )
-                ids = pdf["__id"].to_numpy()
-                if ids.dtype == object:
-                    ids = ids.astype(str)
-                out_q, out_id, out_d = [], [], []
-                for j, qid in enumerate(qids_l):
-                    d = _popcount(np.bitwise_xor(Vw, Qw[j][None, :]))
-                    # argpartition shortlist (the bulk kernel's shape):
-                    # O(n) select of the k-th distance, then lexsort only
-                    # the <=thresh tie set instead of the whole partition
-                    if len(d) > k > 0:
-                        part = np.argpartition(d, k - 1)
-                        thresh = d[part[:k]].max()
-                        cand = np.flatnonzero(d <= thresh)
-                        cand = cand[np.lexsort((ids[cand], d[cand]))][:k]
-                    else:
-                        cand = np.lexsort((ids, d))[:k]
-                    out_q.extend([qid] * len(cand))
-                    out_id.extend(ids[cand].tolist())
-                    out_d.extend(d[cand].astype(np.int64).tolist())
-                yield pd.DataFrame({"query_id": out_q, "id": out_id, "distance": out_d})
-
-        partials = sigs.select(
-            F.col(id_col).alias("__id"), F.col(sig_col).alias(sig_col)
-        ).mapInPandas(kernel, out_schema)
-        return topk_per_query(partials, k)
+        return exact_rerank(
+            cand, queries, rerank_vectors, k,
+            id_col=id_col, rerank_vector_col=rerank_vector_col,
+            query_id_col=query_id_col, query_vector_col=query_vector_col,
+        )
 
     def hamming_knn_bulk(
         self,
@@ -244,96 +209,30 @@ class BinarySketch:
         rerank_vector_col: str = "embedding",
         oversample: int | None = None,
     ) -> DataFrame:
-        """Bulk companion (query set stays a DataFrame end-to-end) — the
-        knn_bulk / adc_knn_bulk cogroup-block shape, identical per-pair
-        math and (distance, id) tie order as ``hamming_knn``.
-        ``oversample=None`` consumes the planner default
-        (plans/tuning.tune_binary)."""
-        from fabstir_vectordb_spark.operators.pq import exact_rerank
-        from fabstir_vectordb_spark.operators.topk import topk_per_query
-
-        if oversample is None:
-            from fabstir_vectordb_spark.plans.tuning import tune_binary
-
-            oversample = tune_binary(self.dim, k).oversample
-
-        if rerank_vectors is not None:
-            cand = self.hamming_knn_bulk(
-                sigs, queries, k * oversample,
-                id_col=id_col, sig_col=sig_col,
-                query_id_col=query_id_col, query_vector_col=query_vector_col,
-                vector_blocks=vector_blocks,
-            )
-            return exact_rerank(
-                cand, queries, rerank_vectors, k,
-                id_col=id_col, rerank_vector_col=rerank_vector_col,
-                query_id_col=query_id_col, query_vector_col=query_vector_col,
-            )
-
-        spark = sigs.sparkSession
-        VB = vector_blocks or spark.sparkContext.defaultParallelism
-
-        v = sigs.select(
-            F.col(id_col).alias("id"),
-            F.col(sig_col).alias("__sig"),
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(VB)).cast("int").alias("__blk"),
+        """Bulk companion (query set stays a DataFrame end-to-end):
+        signatures hash into blocks that meet the replicated query set
+        in a cogroup (scan.hash_block_scan), each group signing its own
+        queries.  Same scorer, so the same rows as ``hamming_knn``."""
+        fetch = k * self._oversample(oversample, k) if rerank_vectors is not None else k
+        cand = hash_block_scan(
+            sigs, id_col, sig_col, queries, query_id_col, query_vector_col,
+            self.scorer(), fetch, vector_blocks,
         )
-        blocks = spark.range(VB).select(F.col("id").cast("int").alias("__blk"))
-        # encode queries ONCE (one map pass over Q rows), then replicate
-        # only the packed words across blocks: 2-8 longs per (query,
-        # block) row instead of the raw float vector, and the per-block
-        # kernel skips VB-fold re-projection of every query
-        qsigs = self.encode(
-            queries.select(
-                F.col(query_id_col).alias("query_id"),
-                F.col(query_vector_col).alias("__qv"),
-            ),
-            vector_col="__qv",
-            sig_col="__qsig",
-        ).select("query_id", "__qsig")
-        qrep = qsigs.crossJoin(blocks)
-
-        out_schema = T.StructType(
-            [
-                T.StructField("query_id", queries.schema[query_id_col].dataType, False),
-                T.StructField("id", sigs.schema[id_col].dataType, False),
-                T.StructField("distance", T.LongType(), False),
-            ]
+        return exact_rerank(
+            cand, queries, rerank_vectors, k,
+            id_col=id_col, rerank_vector_col=rerank_vector_col,
+            query_id_col=query_id_col, query_vector_col=query_vector_col,
         )
 
-        def block_scan(vpdf: pd.DataFrame, qpdf: pd.DataFrame) -> pd.DataFrame:
-            if vpdf.empty or qpdf.empty:
-                return pd.DataFrame({"query_id": [], "id": [], "distance": []})
-            Vw = np.asarray([np.asarray(s, dtype=np.uint32) for s in vpdf["__sig"]])
-            ids = vpdf["id"].to_numpy()
-            if ids.dtype == object:
-                ids = ids.astype(str)
-            out_q, out_id, out_d = [], [], []
-            for qid, qsig in zip(qpdf["query_id"], qpdf["__qsig"]):
-                qw = np.asarray(qsig, dtype=np.uint32)
-                d = _popcount(np.bitwise_xor(Vw, qw[None, :]))
-                # `> k > 0`: at k=0 the shortlist's d[part[:0]].max()
-                # would raise on the empty slice; the else branch's
-                # lexsort[:0] returns empty instead (same guard as the
-                # point kernel above — harmonized, ADVICE r8)
-                if len(d) > k > 0:
-                    part = np.argpartition(d, k - 1)
-                    thresh = d[part[:k]].max()
-                    cand = np.flatnonzero(d <= thresh)
-                    cand = cand[np.lexsort((ids[cand], d[cand]))][:k]
-                else:
-                    cand = np.lexsort((ids, d))[:k]
-                out_q.extend([qid] * len(cand))
-                out_id.extend(ids[cand].tolist())
-                out_d.extend(d[cand].astype(np.int64).tolist())
-            return pd.DataFrame({"query_id": out_q, "id": out_id, "distance": out_d})
+    def _oversample(self, oversample: int | None, k: int) -> int:
+        if oversample is not None:
+            return oversample
+        from fabstir_vectordb_spark.plans.tuning import tune_binary
 
-        partials = (
-            v.groupBy("__blk")
-            .cogroup(qrep.groupBy("__blk"))
-            .applyInPandas(block_scan, out_schema)
-        )
-        return topk_per_query(partials, k)
+        return tune_binary(self.dim, k).oversample
+
+    def scorer(self) -> "HammingScorer":
+        return HammingScorer(self.planes, self.scale)
 
     # ------------------------------------------------------ persistence
 

@@ -59,6 +59,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from fabstir_vectordb_spark.operators.scan import (
+    column,
+    emit,
+    matrix,
+    partial_schema,
+    sort_keys,
+)
 from fabstir_vectordb_spark.operators.topk import topk_per_query
 
 _SPLITMIX_C0 = np.uint64(0x9E3779B97F4A7C15)
@@ -465,7 +472,7 @@ class HNSWIndex:
             # (per-graph mean vectors, one bounded G-row collect) rather
             # than silently falling back to hash assignment — hash-placed
             # inserts land in cluster-incoherent graphs that a
-            # probe_graphs<G search would systematically miss (ADVICE r5).
+            # probe_graphs<G search would systematically miss.
             from fabstir_vectordb_spark.operators.ivf import IVFIndex
 
             if self._routers is None:
@@ -680,7 +687,7 @@ class HNSWIndex:
         with the exact global window.  Both sides stay DataFrames (no
         driver collect): queries are replicated per graph (Q x G rows —
         G is a knob, queries are the small side) and cogrouped with the
-        node table, the same shape as knn.cogroup_block_knn.  Output:
+        node table, the same shape as scan.cogroup_scan.  Output:
         (query_id, id, distance) asc, k rows per query.
 
         ``probe_graphs=R`` routes each query to only its R nearest
@@ -727,13 +734,10 @@ class HNSWIndex:
             )
         else:
             if self.num_graphs:
-                # G is a constant of the index (build() pins it): a local
-                # range relation replaces the former full-table
-                # distinct() — one aggregate pass + exchange over the
-                # whole graph table REMOVED from every search (r12
-                # optimization, guide §2.4).  Extra ids for empty graphs
-                # are harmless: their cogroup bucket has no nodes and the
-                # kernel emits nothing, exactly as before.
+                # G is a constant of the index (build() pins it), so a
+                # local range relation lists the graphs without a pass
+                # over the graph table.  Ids of empty graphs are
+                # harmless: their cogroup bucket has no nodes.
                 gids = spark.range(int(self.num_graphs)).select(
                     F.col("id").cast("int").alias("graph_id")
                 )
@@ -745,64 +749,39 @@ class HNSWIndex:
                     (F.col("graph_id") + F.lit(0)).cast("int").alias("graph_id")
                 ).distinct()
             qrep = q0.crossJoin(gids)
-        out_schema = T.StructType(
-            [
-                T.StructField("query_id", qid_t, False),
-                T.StructField("id", id_t, False),
-                T.StructField("distance", T.DoubleType(), False),
-            ]
-        )
-
+        out_schema = partial_schema(qid_t, id_t)
         cosine = self.metric == "cosine"
         arrow_schema = to_arrow_schema(out_schema)
 
-        def graph_topk(ga: "pa.Table", qa: "pa.Table") -> "pa.Table":
-            # Arrow-native kernel (r12 optimization, guide §4.2/§4.3):
-            # the graph table is the heavy side of this cogroup, and the
-            # former applyInPandas paid (a) a full Arrow->pandas
-            # conversion of every nested column and (b) a per-row Python
-            # parse (pos dict + per-layer list comprehensions, ~35 ms per
-            # graph).  Reading the Arrow buffers directly makes the parse
-            # vectorized: vectors are one flat float64 buffer reshaped to
-            # (n, dim), neighbor lists are CSR (offsets + one flat id
-            # buffer) sliced into per-layer position views, and the
-            # id->position map is ONE searchsorted over the flat buffer
-            # (~9 ms per graph measured at the 100k datum).  Same rows,
-            # same distances, same tie-breaks as the pandas form.
+        def graph_topk(key, ga: "pa.Table", qa: "pa.Table") -> "pa.Table":
+            # Arrow-native parse: vectors come from one flat buffer,
+            # neighbour lists are CSR (offsets + one flat id buffer) sliced
+            # into per-layer position views, and the id -> position map is
+            # ONE searchsorted over the flat buffer.
             if ga.num_rows == 0 or qa.num_rows == 0:
                 return arrow_schema.empty_table()
-            ga = ga.combine_chunks()
-            ids_raw = ga.column("id").to_numpy(zero_copy_only=False)
-            # stable argsort == the former sort_values("id", mergesort)
-            order = np.argsort(ids_raw, kind="stable")
-            ids = ids_raw[order]
-            numeric_ids = ids.dtype != object
-            if not numeric_ids:
-                ids = ids.astype(str)
+            id_col = column(ga, "id")
+            keys = sort_keys(id_col)
+            order = np.argsort(keys, kind="stable")
+            ids = keys[order]
             n = len(ids)
-            vec = ga.column("vector").combine_chunks()
-            dim = vec.value_lengths()[0].as_py()
-            V = (
-                vec.flatten().to_numpy(zero_copy_only=False)
-                .astype(np.float64, copy=False).reshape(n, dim)[order]
-            )
-            levels = ga.column("level").to_numpy(zero_copy_only=False)[order]
-            deleted = ga.column("deleted").to_numpy(zero_copy_only=False)[order]
-            outer = ga.column("neighbors").combine_chunks()
+            V = matrix(column(ga, "vector"))[order]
+            levels = column(ga, "level").to_numpy(zero_copy_only=False)[order]
+            deleted = column(ga, "deleted").to_numpy(zero_copy_only=False)[order]
+            outer = column(ga, "neighbors")
             outer_l = outer.value_lengths().to_numpy(zero_copy_only=False)
             inner = outer.flatten()
             inner_l = inner.value_lengths().to_numpy(zero_copy_only=False)
-            flat = inner.flatten().to_numpy(zero_copy_only=False)
-            if numeric_ids:
-                # ids are unique and every neighbor id exists in ids
-                fpos = np.searchsorted(ids, flat)
-            else:
-                pos = {v: i for i, v in enumerate(ids)}
-                fpos = np.fromiter(
-                    (pos[x] for x in flat.astype(str)),
-                    dtype=np.int64, count=len(flat),
+            flat = sort_keys(inner.flatten())
+            fpos = np.searchsorted(ids, flat)
+            # a neighbour id missing from the graph (a corrupt or foreign
+            # table) would otherwise resolve to whichever node sorts next
+            bad = ids[np.minimum(fpos, n - 1)] != flat
+            if bad.any():
+                raise ValueError(
+                    f"graph {key[0].as_py()}: neighbour id "
+                    f"{flat[np.argmax(bad)]!r} is not a node of the graph"
                 )
-            fpos = np.ascontiguousarray(fpos, dtype=np.int64)
             inner_off = np.concatenate(([0], np.cumsum(inner_l)))
             outer_off = np.concatenate(([0], np.cumsum(outer_l)))
             layer_arrays = [
@@ -823,15 +802,9 @@ class HNSWIndex:
             max_lvl = int(levels[entry])
             visited = np.zeros(n, dtype=bool)  # shared scratch, reset per beam
 
-            qids_col = qa.column("query_id").to_pylist()
-            qvec = qa.column("__qv").combine_chunks()
-            qdim = qvec.value_lengths()[0].as_py()
-            Qm = (
-                qvec.flatten().to_numpy(zero_copy_only=False)
-                .astype(np.float64, copy=False).reshape(len(qids_col), qdim)
-            )
-            out_q, out_id, out_d = [], [], []
-            for qi, qid in enumerate(qids_col):
+            Qm = matrix(column(qa, "__qv"))
+            out_q, out_p, out_d = [], [], []
+            for qi in range(len(Qm)):
                 q = Qm[qi]
                 q_zero = cosine and not q.any()
                 dcache: dict[int, float] = {}
@@ -852,22 +825,20 @@ class HNSWIndex:
                         # so beam/top-k order is unchanged); 0-norm guard
                         # mirrors the exact kernel exactly
                         d = 1.0 if (q_zero or zero_node[p]) else d * d / 2.0
-                    out_q.append(qid)
-                    out_id.append(ids[p])
+                    out_q.append(qi)
+                    out_p.append(order[p])
                     out_d.append(d)
                     taken += 1
                     if taken >= k_i:
                         break
-            return pa.table(
+            return pa.Table.from_batches(
                 [
-                    pa.array(out_q, arrow_schema.field("query_id").type),
-                    pa.array(
-                        [x.item() if hasattr(x, "item") else x for x in out_id],
-                        arrow_schema.field("id").type,
-                    ),
-                    pa.array(out_d, pa.float64()),
-                ],
-                schema=arrow_schema,
+                    emit(
+                        arrow_schema, column(qa, "query_id"),
+                        np.asarray(out_q, dtype=np.int64), id_col,
+                        np.asarray(out_p, dtype=np.int64), np.asarray(out_d),
+                    )
+                ]
             )
 
         partials = (

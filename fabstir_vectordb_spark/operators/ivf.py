@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 
 from fabstir_vectordb_spark.functions import distance as D
 from fabstir_vectordb_spark.operators.knn import brute_force_knn
+from fabstir_vectordb_spark.operators.scan import cogroup_scan
 from fabstir_vectordb_spark.operators.topk import topk_per_query
 
 DEFAULT_N_CLUSTERS = 256  # src/ivf/core.rs:50-60
@@ -51,6 +52,14 @@ DEFAULT_N_PROBE = 16
 DEFAULT_TRAIN_SIZE = 10_000
 DEFAULT_MAX_ITER = 25
 MIN_TRAINING_SIZE = 10  # below this: brute-force mode (hybrid/core.rs:262-269)
+
+
+def rank_probes(C: np.ndarray, q, n_probe: int) -> np.ndarray:
+    """Indices of the ``n_probe`` centroids nearest ``q`` under
+    (round(L2, 6), cluster id) — the one probe ranking every IVF path
+    uses, driver-side or in a kernel."""
+    d = np.linalg.norm(C - np.asarray(q, dtype=np.float64), axis=1)
+    return np.lexsort((np.arange(len(d)), np.round(d, 6)))[:n_probe]
 
 
 @dataclass
@@ -172,22 +181,13 @@ class IVFIndex:
     # --------------------------------------------------------------- search
 
     def _probes_from_rows(self, rows: list, n_probe: int) -> list[tuple]:
-        out = []
-        for r in rows:
-            q = np.asarray(r[1], dtype=np.float64)
-            d = np.linalg.norm(self.centroids - q, axis=1)
-            order = np.lexsort((np.arange(len(d)), np.round(d, 6)))[:n_probe]
-            for cid in order:
-                out.append((r[0], int(cid)))
-        return out
-
-    def probes_for(self, queries: DataFrame, n_probe: int, query_id_col="query_id",
-                   query_vector_col="vector") -> list[tuple]:
-        """Driver-side: rank centroids per query, take n_probe
-        (ivf/core.rs:645-656). Centroids are tiny — this is the same
-        'broadcast the small side' decision the reference hard-codes."""
-        rows = queries.select(query_id_col, query_vector_col).collect()
-        return self._probes_from_rows(rows, n_probe)
+        """(query_id, cluster_id) probe pairs of collected (query_id,
+        vector) rows, ranked driver-side (ivf/core.rs:645-656)."""
+        return [
+            (r[0], int(c))
+            for r in rows
+            for c in rank_probes(self.centroids, r[1], n_probe)
+        ]
 
     def search(
         self,
@@ -221,13 +221,6 @@ class IVFIndex:
         pairs = self._probes_from_rows(qrows, n_probe)
         probe_union = sorted({cid for _, cid in pairs})
 
-        # NOTE (r11 optimization round): an attach-vectors-by-in-plan-join
-        # variant (createDataFrame of (qid, cid) pairs only, broadcast
-        # join against `queries` for the vectors) was measured 1.26x
-        # SLOWER in an interleaved A/B at sf0.1 — the join adds a scan +
-        # join stage inside the broadcast build that costs more than
-        # re-serializing the (tiny, <= Q) query vectors through
-        # createDataFrame.  Kept as the direct local relation.
         qvecs = {r[0]: r[1] for r in qrows}
         probes = spark.createDataFrame(
             [(qid, cid, qvecs[qid]) for qid, cid in pairs],
@@ -266,37 +259,23 @@ class IVFIndex:
         analogue: parallel_search, src/hybrid/search_integration.rs:125-211,
         which loops per query; this is set-at-a-time).
 
-        ``sub_blocks``: the cogroup loads ONE block's vectors into one
-        task's Arrow frame, so a block must fit task memory.  With S > 1
-        each cluster splits into S hash sub-blocks (probes replicate per
-        sub-block — an S-fold fanout of the tiny probe table, the same
-        deliberate small-side cost as knn_bulk's vector_blocks knob);
-        size S so cluster_rows/S * dim * 8B fits an executor task.  The
-        merge is unchanged: top-k over block-local partials is exact for
-        any partitioning of the same probed row set.
+        Plan: ``probe_pairs`` emits the n_probe nearest clusters per query
+        as (query, cluster) rows, which COGROUP with the clustered table
+        on cluster_id (scan.cogroup_scan): each cluster runs one exact
+        GEMM-screened scan emitting <= k rows per (query, cluster).
 
-        Plan: centroids (tiny, driver-held by construction) broadcast
-        into a map-only Arrow kernel that ranks them per query batch with
-        one GEMM and emits the n_probe nearest as (query, cluster) rows —
-        distributed probe selection with the exact ranking order of the
-        driver path (``_probes_from_rows``).  The probe table (Q x
-        n_probe rows) then COGROUPS with the clustered table on
-        cluster_id, and each cluster runs one vectorized GEMM kernel
-        emitting <= k rows per (query, cluster) — the same block-partial
-        shape as knn_bulk, with the IVF cluster as the block.  (Both a
-        plain join + distance expression and a crossJoin + window over
-        centroids leave the distance in interpreted higher-order
-        functions — HOFs never enter whole-stage codegen — which
-        measured ~10x slower at Q=8 and ~100s at Q=2000 when the query
-        side sat on one post-limit partition.)
+        ``sub_blocks``: a cogroup group holds ONE block's vectors in one
+        task, so a block must fit task memory.  With S > 1 each cluster
+        splits into S hash sub-blocks (probes replicate per sub-block — an
+        S-fold fanout of the tiny probe table); size S so
+        cluster_rows/S * dim * 8B fits an executor task.  The merge is
+        unchanged: top-k over block-local partials is exact for any
+        partitioning of the same probed row set.
 
         At n_probe = n_clusters this is exactly brute force — the same
         oracle hook as ``search``.
         """
-        import pandas as pd
-        from pyspark.sql import types as T
-
-        from fabstir_vectordb_spark.operators.knn import cogroup_block_knn, knn_bulk
+        from fabstir_vectordb_spark.operators.knn import ExactScorer, knn_bulk
 
         if self.centroids is None:
             return knn_bulk(
@@ -304,6 +283,7 @@ class IVFIndex:
                 id_col=self.id_col, vector_col=self.vector_col,
                 query_id_col=query_id_col, query_vector_col=query_vector_col,
             )
+        scorer = ExactScorer(metric)
         spark = vectors_with_cluster.sparkSession
         probes = self.probe_pairs(
             queries, n_probe,
@@ -327,12 +307,7 @@ class IVFIndex:
                 (F.col("__blk") * S + F.col("__sub")).alias("__blk"),
                 "__qv",
             )
-        partials = cogroup_block_knn(
-            v, probes, k, metric,
-            qid_type=queries.schema[query_id_col].dataType,
-            id_type=vectors_with_cluster.schema[self.id_col].dataType,
-        )
-        return topk_per_query(partials, k)
+        return cogroup_scan(v, probes, scorer, k)
 
     def probe_pairs(
         self,
@@ -342,50 +317,57 @@ class IVFIndex:
         query_vector_col: str = "vector",
     ) -> DataFrame:
         """Distributed probe selection: (query_id, __blk, __qv) rows, one
-        per probed cluster — a map-only Arrow kernel over the broadcast
-        centroids with the exact ranking order of the driver path
-        (``_probes_from_rows``).  Shared by ``search_bulk`` and the
-        IVFPQ composition (operators/ivfpq.py)."""
-        import pandas as pd
+        per probed cluster — a map-only Arrow pass over the broadcast
+        centroids with the ranking of the driver path (``rank_probes``).
+        Shared by ``search_bulk``, the IVFPQ cogroup plan and HNSW's
+        multi-assignment routing."""
+        import pyarrow as pa
         from pyspark.sql import types as T
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        from fabstir_vectordb_spark.operators.scan import column, matrix
 
         if self.centroids is None:
             raise ValueError(
                 "index is untrained (brute-force mode): no centroids to probe"
             )
-        spark = queries.sparkSession
-        bc = spark.sparkContext.broadcast(self.centroids)
+        bc = queries.sparkSession.sparkContext.broadcast(self.centroids)
         q = queries.select(
             F.col(query_id_col).alias("query_id"),
             F.col(query_vector_col).alias("__qv"),
         )
         probe_schema = T.StructType(
             [
-                T.StructField("query_id", queries.schema[query_id_col].dataType, False),
+                T.StructField("query_id", q.schema["query_id"].dataType, False),
                 T.StructField("__blk", T.IntegerType(), False),
                 T.StructField("__qv", q.schema["__qv"].dataType, False),
             ]
         )
+        arrow_schema = to_arrow_schema(probe_schema)
         np_ = min(n_probe, self.n_clusters)
 
         def probe_kernel(batches):
-            C = np.asarray(bc.value, dtype=np.float64)
-            for pdf in batches:
-                if pdf.empty:
+            C = bc.value
+            for b in batches:
+                if b.num_rows == 0:
                     continue
-                out_qid, out_blk, out_qv = [], [], []
-                for qid, qv in zip(pdf["query_id"], pdf["__qv"]):
-                    # same arithmetic + tie order as _probes_from_rows
-                    d = np.linalg.norm(C - np.asarray(qv, dtype=np.float64), axis=1)
-                    order = np.lexsort((np.arange(len(d)), np.round(d, 6)))[:np_]
-                    out_qid.extend([qid] * len(order))
-                    out_blk.extend(int(c) for c in order)
-                    out_qv.extend([qv] * len(order))
-                yield pd.DataFrame(
-                    {"query_id": out_qid, "__blk": out_blk, "__qv": out_qv}
+                qv = column(b, "__qv")
+                Q = matrix(qv)
+                ranked = [rank_probes(C, Q[i], np_) for i in range(len(Q))]
+                pos = pa.array(
+                    np.repeat(np.arange(len(Q)), [len(r) for r in ranked]),
+                    pa.int64(),
+                )
+                yield pa.record_batch(
+                    [
+                        column(b, "query_id").take(pos),
+                        pa.array(np.concatenate(ranked), pa.int32()),
+                        qv.take(pos),
+                    ],
+                    schema=arrow_schema,
                 )
 
-        return q.mapInPandas(probe_kernel, probe_schema)
+        return q.mapInArrow(probe_kernel, probe_schema)
 
     # ------------------------------------------------------------- evaluate
 

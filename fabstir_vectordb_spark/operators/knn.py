@@ -14,12 +14,12 @@ whole-stage-codegen column expression, windowed top-k.  Simple, fully
 declarative; the cross-join output is Q*N rows, so use it when Q is tiny
 or a metadata pre-filter makes N small.
 
-``impl="kernel"`` — Arrow-batched numpy kernel via ``mapInPandas``: each
-input partition computes distances for all queries with BLAS and emits
-only its per-partition top-k per query (a map-side partial reduction —
-no Q*N shuffle).  A final window over Q * num_partitions * k rows picks
-the exact global top-k.  This is the 100 TB path: the only shuffle is the
-tiny partial-result set.
+``impl="kernel"`` — ``ExactScorer`` over operators/scan.py's broadcast
+delivery: each input partition computes distances for all queries with
+BLAS and emits only its per-partition top-k per query (a map-side
+partial reduction — no Q*N shuffle).  A final window over
+Q * num_partitions * k rows picks the exact global top-k.  This is the
+100 TB path: the only shuffle is the tiny partial-result set.
 
 Both strategies rank by (round(distance, 6), id) — see operators/topk.py
 for why that makes results deterministic across engines.
@@ -28,13 +28,18 @@ for why that makes results deterministic across engines.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from fabstir_vectordb_spark.functions import distance as D
-from fabstir_vectordb_spark.operators.topk import ROUND_DECIMALS, topk_per_query
+from fabstir_vectordb_spark.operators.scan import (
+    Scorer,
+    broadcast_scan,
+    cogroup_scan,
+    hash_block_scan,
+)
+from fabstir_vectordb_spark.operators.topk import topk_per_query
 
 _METRICS = ("l2", "cosine", "dot")
 
@@ -68,101 +73,76 @@ def _kernel_distances(metric: str, V: np.ndarray, q: np.ndarray) -> np.ndarray:
     raise ValueError(f"unknown metric {metric!r}")
 
 
-def _batch_topk_rows(
-    metric: str,
-    V: np.ndarray,
-    ids: np.ndarray,
-    qids,
-    Q: np.ndarray,
-    k: int,
-):
-    """All-queries-at-once top-k over one vector block.
+class ExactScorer(Scorer):
+    """Exact l2 / cosine / dot distances for operators/scan.py.
 
-    One GEMM (``Q @ V.T``) SCREENS candidates per query; the final
-    distances of the survivors are then recomputed with the exact
-    per-query arithmetic of ``_kernel_distances``, so the output is
-    identical to the old per-query loop (same round(6) values, same
-    tie-breaks) while the O(Q*N*dim) work runs as one BLAS call instead
-    of Q separate GEMVs with Q full-size temporaries.
+    One GEMM (``Q @ V.T``) per query chunk SCREENS candidates; the
+    survivors' distances are then recomputed with the exact per-query
+    arithmetic of ``_kernel_distances``, so values and tie-breaks match
+    a plain per-query scan while the O(Q*N*dim) work runs as BLAS.
 
     The screening band is padded for (a) the round(6) tie window the
     exact selection honours (absolute 1e-6 on the distance scale) and
     (b) the numeric gap between the GEMM expansion and the direct form
     (~dim*eps*|v||q|, covered by the 1e-9 absolute + relative pads), so
-    no true top-k member can be screened out.
+    no true top-k member can be screened out."""
 
-    Yields (query_id, id, distance) triples appended to lists.
-    """
-    nq, n = len(Q), len(V)
-    out_q: list = []
-    out_id: list = []
-    out_d: list = []
-    if n == 0 or nq == 0:
-        return out_q, out_id, out_d
+    def __init__(self, metric: str):
+        if metric not in _METRICS:
+            raise ValueError(f"unknown metric {metric!r}; one of {_METRICS}")
+        self.metric = metric
 
-    if metric == "l2":
-        vn2 = np.einsum("ij,ij->i", V, V)
-    elif metric == "cosine":
-        vn = np.linalg.norm(V, axis=1)
-
-    # One reused GEMM buffer (allocated once per block, in-place score
-    # arithmetic, per-ROW kth extraction) keeps the fresh-page footprint
-    # at one ~16 MB buffer per worker instead of ~100 MB of temporaries
-    # per chunk — first-touch page faults are the dominant cost of naive
-    # full-matrix scoring on slow-fault hosts, not the FLOPs.
-    qchunk = min(nq, max(16, 2_000_000 // max(n, 1)))
-    G = np.empty((qchunk, n), dtype=np.float64)
-    for qs in range(0, nq, qchunk):
-        Qc = Q[qs : qs + qchunk]
-        m = len(Qc)
-        Gm = G[:m]
-        np.dot(Qc, V.T, out=Gm)  # the only O(q*N*dim) op
+    def scan(self, V: np.ndarray, Q: np.ndarray, k: int):
+        metric = self.metric
+        nq, n = len(Q), len(V)
+        if n == 0 or nq == 0:
+            return
         if metric == "l2":
-            qn2 = np.einsum("ij,ij->i", Qc, Qc)
-            Gm *= -2.0
-            Gm += vn2[None, :]
-            Gm += qn2[:, None]
-            np.maximum(Gm, 0.0, out=Gm)
+            vn2 = np.einsum("ij,ij->i", V, V)
         elif metric == "cosine":
-            qn = np.linalg.norm(Qc, axis=1)
-        else:  # dot
-            np.negative(Gm, out=Gm)
+            vn = np.linalg.norm(V, axis=1)
 
-        for j in range(m):
-            if metric == "cosine":
-                denom = vn * qn[j]
-                row = 1.0 - np.divide(
-                    Gm[j], denom, out=np.zeros(n), where=denom != 0.0
-                )
-            else:
-                row = Gm[j]
-            if n > k:
-                kth = np.partition(row, k - 1)[k - 1]
-            else:
-                kth = row.max()
+        # One reused GEMM buffer (allocated once per block, in-place score
+        # arithmetic, per-ROW kth extraction) keeps the fresh-page footprint
+        # at one ~16 MB buffer per worker instead of ~100 MB of temporaries
+        # per chunk — first-touch page faults are the dominant cost of naive
+        # full-matrix scoring on slow-fault hosts, not the FLOPs.
+        qchunk = min(nq, max(16, 2_000_000 // max(n, 1)))
+        G = np.empty((qchunk, n), dtype=np.float64)
+        for qs in range(0, nq, qchunk):
+            Qc = Q[qs : qs + qchunk]
+            m = len(Qc)
+            Gm = G[:m]
+            np.dot(Qc, V.T, out=Gm)  # the only O(q*N*dim) op
             if metric == "l2":
-                # band in SQUARED space: (d_k + round(6) tie window)^2
-                # + expansion-error pad
-                band = (np.sqrt(kth) + 2e-6) ** 2 + 1e-9 + kth * 1e-12
-            else:
-                band = kth + 2e-6 + 1e-9 * abs(kth) + 1e-12
-            cand = np.flatnonzero(row <= band)
-            d = _kernel_distances(metric, V[cand], Qc[j])  # exact, original form
-            dr = np.round(d, ROUND_DECIMALS)
-            cids = ids[cand]
-            # `> k > 0`: k=0 must fall to the empty lexsort[:0] branch,
-            # not an argpartition shortlist whose empty-slice max raises
-            if len(d) > k > 0:
-                part = np.argpartition(dr, k - 1)
-                thresh = dr[part[:k]].max()
-                keep = np.flatnonzero(dr <= thresh)
-                keep = keep[np.lexsort((cids[keep], dr[keep]))][:k]
-            else:
-                keep = np.lexsort((cids, dr))[:k]
-            out_q.extend([qids[qs + j]] * len(keep))
-            out_id.extend(cids[keep].tolist())
-            out_d.extend(d[keep].tolist())
-    return out_q, out_id, out_d
+                qn2 = np.einsum("ij,ij->i", Qc, Qc)
+                Gm *= -2.0
+                Gm += vn2[None, :]
+                Gm += qn2[:, None]
+                np.maximum(Gm, 0.0, out=Gm)
+            elif metric == "cosine":
+                qn = np.linalg.norm(Qc, axis=1)
+            else:  # dot
+                np.negative(Gm, out=Gm)
+
+            for j in range(m):
+                if metric == "cosine":
+                    denom = vn * qn[j]
+                    row = 1.0 - np.divide(
+                        Gm[j], denom, out=np.zeros(n), where=denom != 0.0
+                    )
+                else:
+                    row = Gm[j]
+                kth = np.partition(row, k - 1)[k - 1] if n > k else row.max()
+                if metric == "l2":
+                    # band in SQUARED space: (d_k + round(6) tie window)^2
+                    # + expansion-error pad
+                    band = (np.sqrt(kth) + 2e-6) ** 2 + 1e-9 + kth * 1e-12
+                else:
+                    band = kth + 2e-6 + 1e-9 * abs(kth) + 1e-12
+                cand = np.flatnonzero(row <= band)
+                # exact distances in the original form
+                yield qs + j, cand, _kernel_distances(metric, V[cand], Qc[j])
 
 
 def knn_join(
@@ -201,57 +181,23 @@ def knn_kernel(
     query_vector_col: str = "vector",
     query_rows: list | None = None,
 ) -> DataFrame:
-    """Partial-reduction numpy kNN (impl="kernel").
-
-    Queries are collected to the driver (they are the small side — the
-    same assumption the expr path's broadcast makes) and shipped to
-    executors inside the Arrow task closure.  ``query_rows`` optionally
-    supplies that collect's result (rows of (query_id, vector), the
-    exact shape `queries.select(query_id_col, query_vector_col)` yields):
-    a caller constructing several kernel searches can run the collects
-    concurrently (guide §2.6 — overlap independent driver jobs) instead
-    of paying one sequential driver job per search.
-    """
-    if metric not in _METRICS:
-        raise ValueError(f"unknown metric {metric!r}; one of {_METRICS}")
-    spark = vectors.sparkSession
+    """Partial-reduction numpy kNN (impl="kernel"): the query set is
+    collected (the small side, as for the expr path's broadcast) and
+    broadcast into one Arrow pass over the vectors.  ``query_rows``
+    optionally supplies that collect's result (rows of (query_id,
+    vector), the shape `queries.select(query_id_col, query_vector_col)`
+    yields), so a caller building several searches can run the collects
+    concurrently instead of one sequential driver job per search."""
+    scorer = ExactScorer(metric)
     qrows = (
         query_rows
         if query_rows is not None
         else queries.select(query_id_col, query_vector_col).collect()
     )
-    if not qrows:
-        raise ValueError("empty query set")
-    qids = [r[0] for r in qrows]
-    Q = np.asarray([r[1] for r in qrows], dtype=np.float64)
-    bc = spark.sparkContext.broadcast((qids, Q))
-
-    qid_type = queries.schema[query_id_col].dataType
-    id_type = vectors.schema[id_col].dataType
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", qid_type, False),
-            T.StructField("id", id_type, False),
-            T.StructField("distance", T.DoubleType(), False),
-        ]
+    rows = vectors.select(F.col(id_col).alias("id"), F.col(vector_col).alias("__v"))
+    return broadcast_scan(
+        rows, scorer, k, qrows, queries.schema[query_id_col].dataType
     )
-
-    def partial_topk(batches):
-        qids_l, Q_l = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            V = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf[vector_col]])
-            ids = pdf[id_col].to_numpy()
-            if ids.dtype == object:
-                ids = ids.astype(str)  # lexsort-able; ASCII order == Spark string order
-            out_q, out_id, out_d = _batch_topk_rows(metric, V, ids, qids_l, Q_l, k)
-            yield pd.DataFrame(
-                {"query_id": out_q, "id": out_id, "distance": out_d}
-            )
-
-    partials = vectors.select(id_col, vector_col).mapInPandas(partial_topk, out_schema)
-    return topk_per_query(partials, k)
 
 
 def knn_bulk(
@@ -270,57 +216,18 @@ def knn_bulk(
     parallel_search, src/hybrid/search_integration.rs:125-211, whose
     clients loop per query; this is the set-at-a-time version).
 
-    Block-parallel shape (the two-big-tables path the kernel/expr
-    variants lack): vectors are hashed into `vector_blocks` blocks and
-    shuffled ONCE; the query table is replicated per block (Q x VB rows
-    — queries are usually the smaller side, and VB is a knob).  A
-    cogrouped applyInPandas computes each (vector-block x all-queries)
-    GEMM and emits only block-local top-k, so the final shuffle is
-    Q * VB * k partial rows, never Q * N.  Size VB so one block's
-    vectors fit a task's memory (N/VB * dim * 8B).
+    Vectors hash into ``vector_blocks`` blocks and shuffle once; the
+    query table is replicated per block (scan.hash_block_scan).  Each
+    block emits only its local top-k, so the final shuffle is
+    Q * blocks * k partial rows, never Q * N.  Size the block count so
+    one block's vectors fit a task's memory (N/VB * dim * 8B).
 
     Output: (query_id, id, distance) ascending, k rows per query.
     """
-    if metric not in _METRICS:
-        raise ValueError(f"unknown metric {metric!r}; one of {_METRICS}")
-    spark = vectors.sparkSession
-    if vector_blocks is not None:
-        VB = vector_blocks
-    else:
-        # scale-adaptive block count: one block per vector-scan split,
-        # capped at the cluster's parallelism.  A scan split is already
-        # sized to task memory (spark.sql.files.maxPartitionBytes), so
-        # block-per-split keeps the per-task GEMM working set at split
-        # size; at corpus scale splits >> cores and this reduces to the
-        # former defaultParallelism constant, while a small input stops
-        # paying for cores-many blocks (replicating the query set per
-        # block) it cannot fill.  Block count does not affect results:
-        # per-block top-k partials always cover the global top-k.
-        from fabstir_vectordb_spark.operators._plan import scan_partitions
-
-        VB = max(
-            1,
-            min(
-                spark.sparkContext.defaultParallelism,
-                scan_partitions(vectors),
-            ),
-        )
-    v = vectors.select(
-        F.col(id_col).alias("id"),
-        F.col(vector_col).alias("__v"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(VB)).cast("int").alias("__blk"),
+    return hash_block_scan(
+        vectors, id_col, vector_col, queries, query_id_col, query_vector_col,
+        ExactScorer(metric), k, vector_blocks,
     )
-    blocks = spark.range(VB).select(F.col("id").cast("int").alias("__blk"))
-    qrep = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(query_vector_col).alias("__qv"),
-    ).crossJoin(blocks)
-    partials = cogroup_block_knn(
-        v, qrep, k, metric,
-        qid_type=queries.schema[query_id_col].dataType,
-        id_type=vectors.schema[id_col].dataType,
-    )
-    return topk_per_query(partials, k)
 
 
 def cogroup_block_knn(
@@ -328,39 +235,14 @@ def cogroup_block_knn(
     qrep: DataFrame,
     k: int,
     metric: str,
-    qid_type: T.DataType,
-    id_type: T.DataType,
+    qid_type: T.DataType | None = None,
+    id_type: T.DataType | None = None,
 ) -> DataFrame:
-    """Shared block-GEMM partial top-k: cogroup `v` (id, __v, __blk) with
-    `qrep` (query_id, __qv, __blk) on __blk; each group runs one
-    vectorized distance kernel and emits <= k rows per (query, block).
-    The caller defines what a block is — a hash bucket (knn_bulk) or an
-    IVF cluster (IVFIndex.search_bulk) — and applies the global top-k."""
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", qid_type, False),
-            T.StructField("id", id_type, False),
-            T.StructField("distance", T.DoubleType(), False),
-        ]
-    )
-
-    def block_topk(vpdf: pd.DataFrame, qpdf: pd.DataFrame) -> pd.DataFrame:
-        if vpdf.empty or qpdf.empty:
-            return pd.DataFrame({"query_id": [], "id": [], "distance": []})
-        V = np.asarray([np.asarray(x, dtype=np.float64) for x in vpdf["__v"]])
-        ids = vpdf["id"].to_numpy()
-        if ids.dtype == object:
-            ids = ids.astype(str)
-        qids = qpdf["query_id"].to_numpy()
-        Q = np.asarray([np.asarray(x, dtype=np.float64) for x in qpdf["__qv"]])
-        out_q, out_id, out_d = _batch_topk_rows(metric, V, ids, qids, Q, k)
-        return pd.DataFrame({"query_id": out_q, "id": out_id, "distance": out_d})
-
-    return (
-        v.groupBy("__blk")
-        .cogroup(qrep.groupBy("__blk"))
-        .applyInPandas(block_topk, out_schema)
-    )
+    """Exact top-k of `qrep` (query_id, __qv, __blk) over `v` (id, __v,
+    __blk), cogrouped on __blk (scan.cogroup_scan).  The output types
+    come from the two frames; ``qid_type`` and ``id_type`` are accepted
+    for older callers and not needed."""
+    return cogroup_scan(v, qrep, ExactScorer(metric), k)
 
 
 def brute_force_knn(

@@ -9,8 +9,9 @@ leaves implicit in its quantized-distance helpers.
 Spark design: training samples to the driver and runs tiny per-subspace
 k-means fits (sklearn-free Lloyd's in numpy — M fits of K centroids on a
 bounded `train_size` sample is driver-scale work, exactly like the
-reference's train()).  Encode/decode/ADC run distributed as Arrow-batched
-mapInPandas kernels with the codebooks broadcast — at 100 TB the codes
+reference's train()).  Encode/decode run distributed as Arrow-batched
+mapInPandas kernels with the codebooks broadcast; ADC search is
+``ADCScorer`` over operators/scan.py's deliveries — at 100 TB the codes
 table is the only thing that moves (M bytes/vector vs 4*dim).
 """
 
@@ -20,25 +21,28 @@ import json
 import os
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-
 from fabstir_vectordb_spark.operators._kmeans import kmeans_fit as _kmeans_fit
+from fabstir_vectordb_spark.operators.scan import (
+    DRIVER_PREPARE_BYTES,
+    Scorer,
+    broadcast_scan,
+    exact_rerank,
+    hash_block_scan,
+    matrix,
+)
 
 
 def _adc_tables(books: "np.ndarray", Q: "np.ndarray", M: int, sub: int,
                 chunk: int = 512) -> "np.ndarray":
     """(nq, M, K) ADC lookup tables for an (already rotated / residual-
-    shifted) query batch.  ONE einsum per <= ``chunk`` queries replaces
-    the former M einsum calls PER QUERY (the per-call Python dispatch
-    dominated at bulk query counts — guide §4.2, vectorize whole batches
-    inside kernels).  Values are bit-identical to the per-query form:
-    einsum('qmkj,qmkj->qmk') reduces j in the same naive sequential
-    order as einsum('kj,kj->k') does for each (q, m).  ``chunk`` bounds
-    the (chunk, M, K, sub) broadcast temporary to a few MB."""
+    shifted) query batch, ONE einsum per <= ``chunk`` queries.  Values
+    do not depend on the batch: einsum('qmkj,qmkj->qmk') reduces j in
+    the same sequential order for each (q, m).  ``chunk`` bounds the
+    (chunk, M, K, sub) broadcast temporary to a few MB."""
     nq = len(Q)
     out = np.empty((nq, M, books.shape[1]), dtype=np.float64)
     Qr = Q.reshape(nq, M, 1, sub)
@@ -48,45 +52,55 @@ def _adc_tables(books: "np.ndarray", Q: "np.ndarray", M: int, sub: int,
     return out
 
 
-def exact_rerank(
-    cand: DataFrame,
-    queries: DataFrame,
-    rerank_vectors: DataFrame,
-    k: int,
-    id_col: str = "vec_id",
-    rerank_vector_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vector_col: str = "vector",
-) -> DataFrame:
-    """Exact re-rank of an over-fetched candidate set: true L2 on only the
-    Q*k*oversample candidate rows, then top-k.  Shared by
-    ProductQuantizer.adc_knn_bulk and IVFPQIndex.search_bulk so the
-    full-probe-equivalence contract can't drift between them.
+def _rotate(Q: np.ndarray, rot: np.ndarray | None) -> np.ndarray:
+    """Rows of ``Q`` through the OPQ rotation, one dgemv per row, so a
+    query's tables do not depend on the batch it arrives in."""
+    if rot is None or not len(Q):
+        return Q
+    return np.stack([q @ rot for q in Q])
 
-    cand is the small side of both joins; no broadcast hint on the query
-    table (it may be big) — AQE decides."""
-    from fabstir_vectordb_spark.functions import distance as D
-    from fabstir_vectordb_spark.operators.topk import topk_per_query
 
-    vecs = rerank_vectors.select(
-        F.col(id_col).alias("id"),
-        F.col(rerank_vector_col).alias("__rv_vec"),
-    )
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(query_vector_col).alias("__rv_q"),
-    )
-    exact = (
-        cand.drop("distance")
-        .join(vecs, "id")
-        .join(q, "query_id")
-        .select(
-            "query_id",
-            "id",
-            D.l2_distance("__rv_vec", "__rv_q").alias("distance"),
-        )
-    )
-    return topk_per_query(exact, k)
+class ADCScorer(Scorer):
+    """Asymmetric-distance scoring of PQ codes for operators/scan.py:
+    per query an (M, K) lookup table, then each row's distance is M
+    table lookups — no decode, no full-width math.
+
+    ``centroids`` (IVFADC residual mode) makes the tables per block: the
+    codes of cluster c encode x - centroid[c], so a query is shifted by
+    the same centroid before its table is built.  ``rotation`` (OPQ)
+    rotates the (shifted) query so table space matches code space."""
+
+    def __init__(self, books, rotation=None, centroids=None):
+        self.books, self.rotation, self.centroids = books, rotation, centroids
+        self.M, self.K, self.sub = books.shape
+        self.per_block = centroids is not None
+        self._buf = None
+
+    def decode(self, arr):
+        return matrix(arr, np.int64)
+
+    def prepare_on_driver(self, nq: int) -> bool:
+        return nq * self.M * self.K * 8 <= DRIVER_PREPARE_BYTES
+
+    def prepare(self, Q, blk=None):
+        if self.centroids is not None:
+            Q = Q - self.centroids[blk][None, :]
+        Q = _rotate(Q, self.rotation)
+        return _adc_tables(self.books, Q, self.M, self.sub).reshape(len(Q), -1)
+
+    def scan(self, codes, P, k):
+        n = len(codes)
+        # flat LUT index (m*K + code_m), shared by every query
+        flat_idx = codes + (np.arange(self.M, dtype=np.int64) * self.K)[None, :]
+        # one gather/sum scratch per task: a fresh (n, M) temporary per
+        # query was the dominant first-touch page cost of this kernel
+        if self._buf is None or len(self._buf[1]) < n:
+            self._buf = (np.empty((n, self.M)), np.empty(n))
+        g, dv = self._buf[0][:n], self._buf[1][:n]
+        for j in range(len(P)):
+            np.take(P[j], flat_idx, out=g)
+            np.sum(g, axis=1, out=dv)
+            yield j, None, np.sqrt(dv, out=dv)
 
 
 class ProductQuantizer:
@@ -250,6 +264,11 @@ class ProductQuantizer:
 
     # --------------------------------------------------------- ADC search
 
+    def scorer(self, centroids: np.ndarray | None = None) -> ADCScorer:
+        """ADC scorer over this quantizer's codes; ``centroids`` for codes
+        of residuals (IVFADC)."""
+        return ADCScorer(self.codebooks, self.rotation, centroids)
+
     def adc_knn(
         self,
         codes_df: DataFrame,
@@ -263,107 +282,30 @@ class ProductQuantizer:
         rerank_vector_col: str = "embedding",
         oversample: int = 4,
     ) -> DataFrame:
-        """Asymmetric-distance kNN over PQ codes: per query, precompute the
-        (M, K) subspace distance table, then each row's approximate squared
-        L2 is M table lookups — no vector decode, no full-width math.
-        Same partial-reduction shape as operators/knn.knn_kernel.
+        """Asymmetric-distance kNN over PQ codes with the query set
+        collected and broadcast (scan.broadcast_scan): per query one
+        (M, K) subspace distance table, then each row's approximate L2
+        is M table lookups.
 
         With `rerank_vectors` (the full-precision table), ADC over-fetches
         k*oversample candidates and re-ranks them exactly — the standard
         PQ accuracy recovery: the expensive full-width math runs on only
         Q*k*oversample rows, never the whole table."""
-        from fabstir_vectordb_spark.operators.topk import ROUND_DECIMALS, topk_per_query
-
-        if rerank_vectors is not None:
-            cand = self.adc_knn(
-                codes_df, queries, k * oversample,
-                id_col=id_col, code_col=code_col,
-                query_id_col=query_id_col, query_vector_col=query_vector_col,
-            )
-            vecs = rerank_vectors.select(
-                F.col(id_col).alias("id"),
-                F.col(rerank_vector_col).alias("__rv_vec"),
-            )
-            q = queries.select(
-                F.col(query_id_col).alias("query_id"),
-                F.col(query_vector_col).alias("__rv_q"),
-            )
-            from fabstir_vectordb_spark.functions import distance as D
-
-            exact = (
-                cand.drop("distance")
-                .join(vecs, "id")
-                .join(F.broadcast(q), "query_id")
-                .select(
-                    "query_id",
-                    "id",
-                    D.l2_distance("__rv_vec", "__rv_q").alias("distance"),
-                )
-            )
-            return topk_per_query(exact, k)
-
-        spark = codes_df.sparkSession
+        fetch = k * oversample if rerank_vectors is not None else k
         qrows = queries.select(query_id_col, query_vector_col).collect()
-        if not qrows:  # np.stack over zero query LUTs has no shape
-            return spark.createDataFrame(
-                [],
-                T.StructType(
-                    [
-                        T.StructField(
-                            "query_id", queries.schema[query_id_col].dataType, False
-                        ),
-                        T.StructField("id", codes_df.schema[id_col].dataType, False),
-                        T.StructField("distance", T.DoubleType(), False),
-                    ]
-                ),
-            )
-        qids = [r[0] for r in qrows]
-        Q = np.asarray([np.asarray(r[1], dtype=np.float64) for r in qrows])
-        if self.rotation is not None:
-            # LUTs are built in rotated space; distances are unchanged
-            # because the rotation is orthonormal
-            Q = Q @ self.rotation
-        bc = spark.sparkContext.broadcast((qids, Q, self.codebooks))
-        M, sub = self.n_subspaces, self.sub_dim
-
-        qid_type = queries.schema[query_id_col].dataType
-        id_type = codes_df.schema[id_col].dataType
-        out_schema = T.StructType(
-            [
-                T.StructField("query_id", qid_type, False),
-                T.StructField("id", id_type, False),
-                T.StructField("distance", T.DoubleType(), False),
-            ]
+        rows = codes_df.select(
+            F.col(id_col).alias("id"), F.col(code_col).alias("__v")
         )
-
-        def kernel(batches):
-            qids_l, Q_l, books = bc.value
-            # tables[j]: (M, K) squared distances from query j's m-th
-            # slice — built for the whole query batch in one vectorized
-            # pass (bit-identical values, see _adc_tables)
-            tables = _adc_tables(books, np.asarray(Q_l), M, sub)
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                codes = np.asarray([np.asarray(c) for c in pdf[code_col]])
-                ids = pdf[id_col].to_numpy()
-                if ids.dtype == object:
-                    ids = ids.astype(str)
-                out_q, out_id, out_d = [], [], []
-                for j, qid in enumerate(qids_l):
-                    # gather: distance = sum_m table[m, code_m]
-                    d = np.sqrt(
-                        np.sum(tables[j][np.arange(M)[None, :], codes], axis=1)
-                    )
-                    dr = np.round(d, ROUND_DECIMALS)
-                    order = np.lexsort((ids, dr))[:k]
-                    out_q.extend([qid] * len(order))
-                    out_id.extend(ids[order].tolist())
-                    out_d.extend(d[order].tolist())
-                yield pd.DataFrame({"query_id": out_q, "id": out_id, "distance": out_d})
-
-        partials = codes_df.select(id_col, code_col).mapInPandas(kernel, out_schema)
-        return topk_per_query(partials, k)
+        cand = broadcast_scan(
+            rows, self.scorer(), fetch, qrows,
+            queries.schema[query_id_col].dataType,
+        )
+        # the query set was just collected: broadcasting it is safe
+        return exact_rerank(
+            cand, F.broadcast(queries), rerank_vectors, k,
+            id_col=id_col, rerank_vector_col=rerank_vector_col,
+            query_id_col=query_id_col, query_vector_col=query_vector_col,
+        )
 
     def adc_knn_bulk(
         self,
@@ -380,102 +322,20 @@ class ProductQuantizer:
         oversample: int = 4,
     ) -> DataFrame:
         """ADC kNN with the QUERY SET as a DataFrame — no driver collect,
-        the bulk companion to ``adc_knn`` (the same two-big-tables shape
-        as operators/knn.knn_bulk: codes hash into blocks and shuffle
-        once, queries replicate per block, a cogrouped kernel gathers
-        block-local top-k, the final shuffle is Q x blocks x k rows).
-
-        Identical per-pair arithmetic and (round(6), id) tie-breaks as
-        ``adc_knn``, so both paths return the same rows for the same
-        fitted quantizer."""
-        from fabstir_vectordb_spark.operators.topk import (
-            ROUND_DECIMALS,
-            topk_per_query,
+        the bulk companion to ``adc_knn``: codes hash into blocks that
+        meet the replicated query set in a cogroup
+        (scan.hash_block_scan).  Same scorer as ``adc_knn``, so both
+        return the same rows for the same fitted quantizer."""
+        fetch = k * oversample if rerank_vectors is not None else k
+        cand = hash_block_scan(
+            codes_df, id_col, code_col, queries, query_id_col, query_vector_col,
+            self.scorer(), fetch, vector_blocks,
         )
-
-        if rerank_vectors is not None:
-            cand = self.adc_knn_bulk(
-                codes_df, queries, k * oversample,
-                id_col=id_col, code_col=code_col,
-                query_id_col=query_id_col, query_vector_col=query_vector_col,
-                vector_blocks=vector_blocks,
-            )
-            return exact_rerank(
-                cand, queries, rerank_vectors, k,
-                id_col=id_col, rerank_vector_col=rerank_vector_col,
-                query_id_col=query_id_col, query_vector_col=query_vector_col,
-            )
-
-        spark = codes_df.sparkSession
-        VB = vector_blocks or spark.sparkContext.defaultParallelism
-        bc = spark.sparkContext.broadcast((self.codebooks, self.rotation))
-        M, sub = self.n_subspaces, self.sub_dim
-
-        v = codes_df.select(
-            F.col(id_col).alias("id"),
-            F.col(code_col).alias("__codes"),
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(VB)).cast("int").alias("__blk"),
+        return exact_rerank(
+            cand, queries, rerank_vectors, k,
+            id_col=id_col, rerank_vector_col=rerank_vector_col,
+            query_id_col=query_id_col, query_vector_col=query_vector_col,
         )
-        blocks = spark.range(VB).select(F.col("id").cast("int").alias("__blk"))
-        qrep = queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(query_vector_col).alias("__qv"),
-        ).crossJoin(blocks)
-
-        out_schema = T.StructType(
-            [
-                T.StructField(
-                    "query_id", queries.schema[query_id_col].dataType, False
-                ),
-                T.StructField("id", codes_df.schema[id_col].dataType, False),
-                T.StructField("distance", T.DoubleType(), False),
-            ]
-        )
-
-        def block_adc(vpdf: pd.DataFrame, qpdf: pd.DataFrame) -> pd.DataFrame:
-            if vpdf.empty or qpdf.empty:
-                return pd.DataFrame({"query_id": [], "id": [], "distance": []})
-            books, rot = bc.value
-            codes = np.asarray([np.asarray(c) for c in vpdf["__codes"]])
-            ids = vpdf["id"].to_numpy()
-            if ids.dtype == object:
-                ids = ids.astype(str)
-            marange = np.arange(M)[None, :]
-            Qm = np.asarray(
-                [np.asarray(qv, dtype=np.float64) for qv in qpdf["__qv"]]
-            )
-            if rot is not None:
-                # per-row dgemv, exactly the former per-query `q @ rot`
-                Qm = np.stack([q @ rot for q in Qm])
-            # (nq, M, K) subspace tables for the whole group batch in one
-            # vectorized pass (bit-identical values, see _adc_tables)
-            tables = _adc_tables(books, Qm, M, sub)
-            out_q, out_id, out_d = [], [], []
-            for i, qid in enumerate(qpdf["query_id"]):
-                d = np.sqrt(np.sum(tables[i][marange, codes], axis=1))
-                dr = np.round(d, ROUND_DECIMALS)
-                # `> k > 0`: k=0 falls to the empty lexsort[:0] branch
-                # (the shortlist's empty-slice max would raise)
-                if len(d) > k > 0:
-                    part = np.argpartition(dr, k - 1)
-                    thresh = dr[part[:k]].max()
-                    cand = np.flatnonzero(dr <= thresh)
-                    cand = cand[np.lexsort((ids[cand], dr[cand]))][:k]
-                else:
-                    cand = np.lexsort((ids, dr))[:k]
-                out_q.extend([qid] * len(cand))
-                out_id.extend(ids[cand].tolist())
-                out_d.extend(d[cand].tolist())
-            return pd.DataFrame(
-                {"query_id": out_q, "id": out_id, "distance": out_d}
-            )
-
-        partials = (
-            v.groupBy("__blk")
-            .cogroup(qrep.groupBy("__blk"))
-            .applyInPandas(block_adc, out_schema)
-        )
-        return topk_per_query(partials, k)
 
     # -------------------------------------------------------- persistence
 

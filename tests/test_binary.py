@@ -157,12 +157,11 @@ def test_bits_must_be_word_multiple():
 
 
 def test_empty_query_set_returns_empty(spark):
-    """Zero queries must yield zero rows, not a zero-shape matmul crash
-    — both the binary point path and PQ's adc_knn (same collect-side
-    LUT construction)."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
+    """Zero queries must yield zero rows (an empty, typed frame), not a
+    zero-shape matmul crash or a raise, in every search family."""
+    from fabstir_vectordb_spark.operators.ivf import IVFIndex
+    from fabstir_vectordb_spark.operators.ivfpq import IVFPQIndex
+    from fabstir_vectordb_spark.operators.knn import knn_bulk, knn_kernel
     from fabstir_vectordb_spark.operators.pq import ProductQuantizer
 
     rng = np.random.RandomState(11)
@@ -173,8 +172,18 @@ def test_empty_query_set_returns_empty(spark):
     )
     sk = BinarySketch.fit(dim=16, bits=64)
     assert sk.hamming_knn(sk.encode(df), noq, 5).count() == 0
+    assert sk.hamming_knn_bulk(sk.encode(df), noq, 5).count() == 0
     pq = ProductQuantizer.fit(df, n_subspaces=4, n_centroids=8)
     assert pq.adc_knn(pq.encode(df), noq, 5).count() == 0
+    assert pq.adc_knn_bulk(pq.encode(df), noq, 5).count() == 0
+    cols = dict(id_col="vec_id", vector_col="embedding")
+    assert knn_kernel(df, noq, 5, **cols).count() == 0
+    assert knn_bulk(df, noq, 5, **cols).count() == 0
+    ivf = IVFIndex.fit(df, n_clusters=4, **cols)
+    assert ivf.search_bulk(ivf.assign(df), noq, 5, n_probe=2).count() == 0
+    ivfpq = IVFPQIndex.fit(df, n_clusters=4, n_subspaces=4, n_centroids=8)
+    enc = ivfpq.encode(df)
+    assert ivfpq.search_bulk(enc, noq, 5, rerank_vectors=df).count() == 0
 
 
 def test_k_zero_returns_empty_not_valueerror(spark):

@@ -645,3 +645,24 @@ def test_compact_graph_threshold_spares_cold_graphs(spark):
     import pytest as _pytest
     with _pytest.raises(ValueError):
         h.compact_graph(tomb, min_deleted_fraction=0.0)
+
+
+@pytest.mark.parametrize("kind", ["long", "string"])
+def test_dangling_neighbour_id_raises(spark, kind):
+    """A neighbour id that is not a node of its graph (a corrupt or
+    foreign table) must fail the search, not resolve to another node."""
+    rng = np.random.default_rng(3)
+    ids = [i if kind == "long" else f"n{i}" for i in range(40)]
+    id_t = "long" if kind == "long" else "string"
+    vec = spark.createDataFrame(
+        [(i, rng.normal(size=4).tolist()) for i in ids],
+        f"id {id_t}, vector array<double>",
+    )
+    q = vec.limit(2).select(F.col("id").alias("query_id"), "vector")
+    idx = HNSWIndex(M=4, M0=8, ef_construction=16, num_graphs=2)
+    rows = [r.asDict() for r in idx.build(vec).collect()]
+    victim = next(r for r in rows if r["neighbors"] and r["neighbors"][0])
+    victim["neighbors"][0][0] = 999 if kind == "long" else "missing"
+    graph = spark.createDataFrame(rows, idx.build(vec).schema)
+    with pytest.raises(Exception, match=r"ValueError: graph \d+: neighbour id"):
+        idx.search_bulk(graph, q, 3).collect()

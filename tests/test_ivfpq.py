@@ -368,3 +368,33 @@ def test_tuned_plan_survives_save_load(spark, embeddings, tmp_path):
     a = _rows(tuned.search_bulk(enc, q, 5, rerank_vectors=embeddings))
     b = _rows(loaded.search_bulk(enc, q, 5, rerank_vectors=embeddings))
     assert a == b
+
+
+@pytest.mark.parametrize("mode", ["raw", "residual", "opq"])
+def test_cogroup_plan_equals_broadcast_plan(spark, monkeypatch, mode):
+    """Above scan.MAX_BROADCAST_QUERIES the query set stays a DataFrame
+    and search_bulk takes the cogroup plan; it must return exactly the
+    broadcast plan's rows, with rerank on."""
+    from fabstir_vectordb_spark.operators import scan
+
+    vec = _clustered_data(spark, n=200).cache()
+    queries = vec.limit(6).selectExpr("vec_id as query_id", "embedding as vector")
+    idx = IVFPQIndex.fit(
+        vec, n_clusters=4, n_subspaces=4, n_centroids=16,
+        residual=mode == "residual", opq="pca" if mode == "opq" else None,
+    )
+    assert (idx.pq.rotation is not None) == (mode == "opq")
+    enc = idx.encode(vec).cache()
+
+    def search():
+        res = idx.search_bulk(
+            enc, queries, 5, n_probe=2, oversample=3, rerank_vectors=vec,
+            prune_scan=True,
+        )
+        return res._jdf.queryExecution().executedPlan().toString(), _rows(res)
+
+    plan_b, rows_b = search()
+    monkeypatch.setattr(scan, "MAX_BROADCAST_QUERIES", 0)
+    plan_c, rows_c = search()
+    assert "FlatMapCoGroupsInArrow" in plan_c and "CoGroups" not in plan_b
+    assert len(rows_b) == 30 and rows_c == rows_b

@@ -674,3 +674,60 @@ def test_mg_frequent_items_pure_jvm_bounded_exchanges(spark):
     assert "FlatMapGroupsInPandas" not in plan
     assert "MapInPandas" not in plan
     assert "Exchange SinglePartition" not in plan
+
+
+def test_vector_search_plans_have_no_pandas_nodes(spark, monkeypatch):
+    """Every vector-search entry point runs its kernels through Arrow
+    (operators/scan.py and HNSW's beam), never a *InPandas node."""
+    import numpy as np
+
+    from fabstir_vectordb_spark.operators import scan
+    from fabstir_vectordb_spark.operators.binary import BinarySketch
+    from fabstir_vectordb_spark.operators.hnsw import HNSWIndex
+    from fabstir_vectordb_spark.operators.ivf import IVFIndex
+    from fabstir_vectordb_spark.operators.ivfpq import IVFPQIndex
+    from fabstir_vectordb_spark.operators.knn import brute_force_knn, knn_bulk
+    from fabstir_vectordb_spark.operators.pq import ProductQuantizer
+
+    def local(df):  # inputs built by pandas kernels, held as local data
+        return spark.createDataFrame(df.collect(), df.schema)
+
+    rng = np.random.RandomState(4)
+    emb = spark.createDataFrame(
+        [(i, rng.normal(size=8).tolist()) for i in range(60)],
+        "vec_id long, embedding array<double>",
+    )
+    q = emb.limit(3).selectExpr("vec_id as query_id", "embedding as vector")
+    cols = dict(id_col="vec_id", vector_col="embedding")
+    ivf = IVFIndex.fit(emb, n_clusters=4, **cols)
+    assigned = local(ivf.assign(emb))
+    pq = ProductQuantizer.fit(emb, n_subspaces=2, n_centroids=8)
+    codes = local(pq.encode(emb))
+    sk = BinarySketch.fit(dim=8, bits=32)
+    sigs = local(sk.encode(emb))
+    ivfpq = IVFPQIndex.fit(emb, n_clusters=4, n_subspaces=2, n_centroids=8)
+    enc = local(ivfpq.encode(emb))
+    hnsw = HNSWIndex(M=4, M0=8, ef_construction=8, num_graphs=2, **cols)
+    graph = local(hnsw.build(emb))
+
+    def ivfpq_cogroup():
+        monkeypatch.setattr(scan, "MAX_BROADCAST_QUERIES", 0)
+        try:
+            return ivfpq.search_bulk(enc, q, 3, rerank_vectors=emb)
+        finally:
+            monkeypatch.undo()
+
+    plans = {
+        "knn_bulk": knn_bulk(emb, q, 3, **cols),
+        "brute_force_knn": brute_force_knn(emb, q, 3, impl="kernel", **cols),
+        "adc_knn": pq.adc_knn(codes, q, 3, rerank_vectors=emb),
+        "adc_knn_bulk": pq.adc_knn_bulk(codes, q, 3, rerank_vectors=emb),
+        "hamming_knn": sk.hamming_knn(sigs, q, 3),
+        "hamming_knn_bulk": sk.hamming_knn_bulk(sigs, q, 3),
+        "ivf_search_bulk": ivf.search_bulk(assigned, q, 3, n_probe=2),
+        "ivfpq_search_bulk": ivfpq.search_bulk(enc, q, 3, rerank_vectors=emb),
+        "ivfpq_search_bulk_cogroup": ivfpq_cogroup(),
+        "hnsw_search_bulk": hnsw.search_bulk(graph, q, 3),
+    }
+    bad = [name for name, df in plans.items() if "InPandas" in _executed(df)]
+    assert not bad, f"*InPandas nodes in {bad}"
