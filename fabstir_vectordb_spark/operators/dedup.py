@@ -211,24 +211,6 @@ def ngram_jaccard_pairs(
 # ---------------------------------------------------------- MinHash LSH
 
 
-def minhash_signature(
-    text: Column | str, num_hashes: int = 64, n: int = 3
-) -> Column:
-    """H seeded min-hashes over the shingle set, as one array<bigint>.
-
-    Seeding trick: xxhash64(seed_literal, shingle) — stays in codegen,
-    no Python, no UDF."""
-    sh = word_shingles(text, n)
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(sh, lambda s, i=i: F.xxhash64(F.lit(f"mh{i}"), s))
-            )
-            for i in range(num_hashes)
-        ]
-    )
-
-
 def _splitmix64(z):
     """Vectorized splitmix64 finalizer over uint64 numpy arrays — a
     well-distributed 64-bit hash family used ONLY for seeded re-hashing

@@ -12,7 +12,7 @@ Parity targets (reference):
                                       src/ivf/core.rs:50-60
 
 Spark-first shape: the "inverted lists" are a vectors table augmented
-with a ``cluster_id`` column (MLlib KMeans assignment) and written
+with a ``cluster_id`` column (nearest-centroid assignment) and written
 ``partitionBy("cluster_id")``.  Search computes each query's n_probe
 nearest centroids driver-side (centroids are tiny), then scans ONLY the
 probed partitions: a ``cluster_id IN (...)`` predicate gives Catalyst
@@ -81,55 +81,36 @@ class IVFIndex:
         seed: int = 42,
         id_col: str = "id",
         vector_col: str = "vector",
-        engine: str = "sample",
     ) -> "IVFIndex":
         """Train on a deterministic sample (order by id, take train_size) —
         the reference trains on the first ``train_size`` inserts.
 
-        engine="sample" (default): collect the size-capped sample and run
-        driver-side numpy k-means — the sample is <= train_size rows
-        (~30 MB at 10k x 384), and MLlib's distributed Lloyd pays ~maxIter
-        rounds of job-scheduling overhead for data this small.
-        engine="mllib": distributed KMeans for when train_size is raised
-        beyond driver scale."""
+        The size-capped sample is collected and clustered by driver-side
+        numpy k-means: it is <= train_size rows (~30 MB at 10k x 384),
+        and a distributed Lloyd pays ~max_iter rounds of job-scheduling
+        overhead for data this small."""
+        from fabstir_vectordb_spark.operators._kmeans import (
+            kmeans_fit,
+            training_error,
+        )
+
         n = vectors.count()
         if n < MIN_TRAINING_SIZE:
             return cls(centroids=None, id_col=id_col, vector_col=vector_col)
         n_clusters = min(n_clusters, n)  # k-means needs >= k points (ivf/core.rs:252)
-
-        if engine == "sample":
-            from fabstir_vectordb_spark.operators._kmeans import (
-                kmeans_fit,
-                training_error,
-            )
-
-            sample = (
-                vectors.select(F.col(vector_col).alias("__arr"))
-                .orderBy(vectors[id_col])
-                .limit(train_size)
-                .collect()
-            )
-            X = np.asarray([np.asarray(r[0], dtype=np.float64) for r in sample])
-            cents = kmeans_fit(
-                X, n_clusters, iters=max_iter, rng=np.random.RandomState(seed)
-            )
-            idx = cls(centroids=cents, id_col=id_col, vector_col=vector_col)
-            idx.training_error = training_error(X, cents)
-            return idx
-
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-
-        train = (
+        sample = (
             vectors.select(F.col(vector_col).alias("__arr"))
             .orderBy(vectors[id_col])
             .limit(train_size)
-            .withColumn("features", array_to_vector(F.col("__arr").cast("array<double>")))
+            .collect()
         )
-        km = KMeans(k=n_clusters, maxIter=max_iter, seed=seed, featuresCol="features")
-        model = km.fit(train)
-        cents = np.array([np.asarray(c) for c in model.clusterCenters()], dtype=np.float64)
-        return cls(centroids=cents, id_col=id_col, vector_col=vector_col)
+        X = np.asarray([np.asarray(r[0], dtype=np.float64) for r in sample])
+        cents = kmeans_fit(
+            X, n_clusters, iters=max_iter, rng=np.random.RandomState(seed)
+        )
+        idx = cls(centroids=cents, id_col=id_col, vector_col=vector_col)
+        idx.training_error = training_error(X, cents)
+        return idx
 
     @property
     def n_clusters(self) -> int:

@@ -30,13 +30,11 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from fabstir_vectordb_spark.functions import distance as D
 from fabstir_vectordb_spark.operators.scan import (
     Scorer,
     broadcast_scan,
-    cogroup_scan,
     hash_block_scan,
 )
 from fabstir_vectordb_spark.operators.topk import topk_per_query
@@ -228,21 +226,6 @@ def knn_bulk(
         vectors, id_col, vector_col, queries, query_id_col, query_vector_col,
         ExactScorer(metric), k, vector_blocks,
     )
-
-
-def cogroup_block_knn(
-    v: DataFrame,
-    qrep: DataFrame,
-    k: int,
-    metric: str,
-    qid_type: T.DataType | None = None,
-    id_type: T.DataType | None = None,
-) -> DataFrame:
-    """Exact top-k of `qrep` (query_id, __qv, __blk) over `v` (id, __v,
-    __blk), cogrouped on __blk (scan.cogroup_scan).  The output types
-    come from the two frames; ``qid_type`` and ``id_type`` are accepted
-    for older callers and not needed."""
-    return cogroup_scan(v, qrep, ExactScorer(metric), k)
 
 
 def brute_force_knn(

@@ -1,9 +1,9 @@
 """SQL-surface ANN rewrite (SURVEY §4 "custom strategy" stretch).
 
-The engine's own API plans index searches explicitly
-(plans/tuning.py:plan_search); this module extends the same decision to
-the RAW SQL surface (functions/sqlfns.py): a ``spark.sql`` user writing
-the canonical vector-search statement
+The engine's own API plans index searches explicitly (VectorDbSession's
+query router, with plans/tuning.py:tune_n_probe); this module extends
+the same decision to the RAW SQL surface (functions/sqlfns.py): a
+``spark.sql`` user writing the canonical vector-search statement
 
     SELECT <id>, vec_l2(<vector>, <query expr>) AS <alias>
     FROM <view>

@@ -4,16 +4,16 @@ The reference hard-codes its optimizations; the two genuinely adaptive
 pieces are reproduced here as planner functions:
 
   auto param tuning     src/hybrid/search_integration.rs:375-449
-                        (n_probe / ef / candidate limit by dataset size
-                        and k)
-  small-data mode       src/hybrid/core.rs:262-269 (< threshold rows =>
-                        no index, brute force)
+                        (n_probe by dataset size and k: tune_n_probe)
+  small-data mode       src/hybrid/core.rs:262-269 (tiny tables probe
+                        every cluster, i.e. search exactly)
 
-plus the strategy choice this engine adds (brute / IVF / PQ+rerank),
-which in Spark terms decides the *physical plan* for the similarity
-join.  Everything else in §4 (pruning, lazy IO, caching, predicate
-pushdown) is Catalyst/Parquet built-ins — deliberately not re-planned
-here.
+plus the knob bundles this engine adds for its other tiers (tune_pq,
+tune_binary, the temporal join tuners).  Which physical path a session
+search takes (IVF probe or exact scan) is decided in one place,
+VectorDbSession's query router.  Everything else in §4 (pruning, lazy
+IO, caching, predicate pushdown) is Catalyst/Parquet built-ins —
+deliberately not re-planned here.
 """
 
 from __future__ import annotations
@@ -49,27 +49,12 @@ def tune_n_probe(dataset_size: int, k: int, n_clusters: int) -> int:
     return min(n_clusters, base * scale)
 
 
-def tune_candidate_limit(k: int) -> int:
-    """Oversample factor for post-ranking steps (rerank, threshold)."""
-    return max(k * 3, 50)  # k*3 is the reference's oversampling constant
-
-
 def plan_near_dup(n_rows: int, brute_force_limit: int = 100_000) -> str:
     """Physical strategy for embedding near-dup pairs: the exact kernel
     broadcasts the full (id, vector) matrix to every task, so it is only
     admissible under the limit; above it, cluster-pruned pairs (compare
     within IVF cells only) is the scale path."""
     return "brute" if n_rows <= brute_force_limit else "cluster"
-
-
-# Binary sign-bit tier boundary (operators/binary.py), from the
-# measured scan series (PERFORMANCE.md "Binary scan series extended to
-# 5M"): 20.2 ms/query at 2M vectors, 76.0 ms at 5M — the full Hamming
-# scan crosses the reference's 58 ms warm point between 2M and 5M on
-# the bench box, so 2M is the conservative per-executor linear-scan
-# ceiling.  Scale-out note: the scan is embarrassingly parallel, so the
-# CLUSTER ceiling is 2M x executors; this constant is per executor.
-BINARY_SCAN_CEILING = 2_000_000
 
 
 @dataclass
@@ -351,97 +336,6 @@ def tune_overlap_bucket(
 ) -> int:
     """Back-compat wrapper: tune_overlap's bucket width alone."""
     return tune_overlap(left, right, left_cols, right_cols)[0]
-
-
-@dataclass
-class SearchPlan:
-    strategy: str  # "brute" | "ivf" | "pq" | "binary"
-    n_probe: int | None = None
-    oversample: int | None = None
-    reason: str = ""
-    pq: "PQPlan | None" = None  # code-geometry knobs when strategy == "pq"
-    binary: "BinaryPlan | None" = None  # sketch knobs when strategy == "binary"
-
-
-def plan_search(
-    dataset_size: int,
-    k: int,
-    n_clusters: int | None,
-    has_filter: bool = False,
-    filter_selectivity: float | None = None,
-    pq_available: bool = False,
-    brute_force_threshold: int = 10_000,
-    dim: int | None = None,
-    recall_target: float | None = None,
-    binary_available: bool = False,
-) -> SearchPlan:
-    """Pick the physical strategy for a similarity join.
-
-    - tiny tables: exact scan — the reference's "HNSW-only/small-dataset
-      mode" (hybrid/core.rs:262-269) generalized
-    - untrained above the exact-scan comfort zone with a sketch on hand
-      (``binary_available``): the binary sign-bit tier — zero-training,
-      16x less scan I/O than floats; past BINARY_SCAN_CEILING per
-      executor the plan still prefers it over a raw exact scan but the
-      reason says to train IVF/IVFPQ (the measured archive path:
-      17.6 ms/query at 5M vs binary's 76 ms)
-    - selective metadata filter: pre-filtered exact scan (the filtered
-      subset is small; pruning clusters first would only LOSE recall —
-      this supersedes the reference's k*3 oversample post-filter)
-    - otherwise IVF probe; PQ+rerank when memory pressure dominates
-      (codes are M bytes/vector vs 4*dim).
-    """
-    selective = has_filter and (filter_selectivity or 1.0) <= 0.01
-    if n_clusters is None or dataset_size < brute_force_threshold:
-        if (
-            binary_available
-            and n_clusters is None
-            and dataset_size >= brute_force_threshold
-            # a highly selective filter beats the sketch: the exact scan
-            # of the pre-filtered subset is both cheaper AND exact, so
-            # the documented 'selective filter => exact scan' rule wins
-            # over the approximate Hamming tier
-            and not selective
-        ):
-            b = tune_binary(dim or 64, k, recall_target)
-            over_ceiling = dataset_size > BINARY_SCAN_CEILING
-            return SearchPlan(
-                "binary",
-                oversample=b.oversample,
-                reason=(
-                    "untrained + sketch available => zero-training "
-                    "Hamming scan"
-                    + (
-                        "; ABOVE per-executor scan ceiling — train "
-                        "IVF/IVFPQ for latency"
-                        if over_ceiling
-                        else ""
-                    )
-                ),
-                binary=b,
-            )
-        return SearchPlan("brute", reason="below index threshold / untrained")
-    if selective:
-        return SearchPlan("brute", reason="selective filter => exact scan of subset")
-    n_probe = tune_n_probe(dataset_size, k, n_clusters)
-    if pq_available and dataset_size > _LARGE:
-        # when the caller states a recall target (and the dim to plan
-        # codes for), attach the measured knob bundle — tune_pq — so the
-        # PQ tier's geometry isn't left at the low-recall defaults
-        pq = (
-            tune_pq(dim, recall_target=recall_target, n_clusters=n_clusters,
-                    dataset_size=dataset_size)
-            if dim is not None and recall_target is not None
-            else None
-        )
-        return SearchPlan(
-            "pq",
-            n_probe=pq.n_probe if pq else n_probe,
-            oversample=pq.oversample if pq else 4,
-            reason="very large table => compressed codes + exact rerank",
-            pq=pq,
-        )
-    return SearchPlan("ivf", n_probe=n_probe, reason="clustered probe")
 
 
 @dataclass

@@ -47,8 +47,9 @@ from fabstir_vectordb_spark.functions.filters import compile_filter
 from fabstir_vectordb_spark.functions.schema import MetadataSchema
 from fabstir_vectordb_spark.operators.cache import QueryResultCache
 from fabstir_vectordb_spark.operators.ivf import IVFIndex
-from fabstir_vectordb_spark.operators.knn import brute_force_knn
+from fabstir_vectordb_spark.operators.knn import brute_force_knn, knn_bulk
 from fabstir_vectordb_spark.operators.topk import topk_per_query
+from fabstir_vectordb_spark.plans.tuning import tune_n_probe
 
 RECENCY_DAYS = 7  # src/hybrid/core.rs:77
 FORMAT_VERSION = 3  # mirrors MANIFEST_VERSION (src/core/chunk.rs:30)
@@ -182,6 +183,56 @@ class VectorDbSession:
 
     # ------------------------------------------------------------------ add
 
+    def _validated_row(
+        self,
+        vid: str,
+        item: dict,
+        dim: int | None,
+        seen: set[str],
+        now: _dt.datetime,
+    ) -> dict:
+        """One insert item checked against the batch so far: vector
+        non-empty and of dimension ``dim`` (when set), id unique in the
+        batch, timestamp a datetime, metadata valid for the schema.
+        Raises on the first failure; on success records ``vid`` in
+        ``seen`` and returns the row to append.  Touches no session
+        state, so a rejected row can never pin the dimension."""
+        vec = [float(x) for x in item["vector"]]
+        if not vec:
+            raise VectorDbError(f"empty vector for id {vid!r}")
+        if dim is not None and len(vec) != dim:
+            raise VectorDbError(
+                f"dimension mismatch for id {vid!r}: got {len(vec)}, expected {dim}"
+            )
+        if vid in seen:
+            raise VectorDbError(f"duplicate id in batch: {vid!r}")
+        ts = item.get("timestamp") or now
+        if not isinstance(ts, _dt.datetime):
+            # a bad-typed timestamp would otherwise escape to
+            # createDataFrame after state was already touched
+            raise VectorDbError(
+                f"timestamp for id {vid!r} must be a datetime, got {type(ts).__name__}"
+            )
+        md = item.get("metadata")
+        if self._schema is not None:
+            self._schema.validate_metadata(md)
+        seen.add(vid)
+        return {"id": vid, "vector": vec, "metadata": md, "ts": ts, "deleted": False}
+
+    def _append(self, rows: list[dict], dim: int, now: _dt.datetime) -> None:
+        """Commit validated, clash-free rows: fix the dimension, union
+        them onto the table, log one Inserted event per row."""
+        self._dim = dim
+        self._invalidate()
+        batch = self._create_batch_df(rows)
+        self._df = (
+            batch
+            if self._df is None
+            else self._df.unionByName(batch, allowMissingColumns=True)
+        )
+        self._bound_lineage()
+        self._emit("Inserted", [r["id"] for r in rows], now)
+
     def add_vectors(
         self,
         vectors: list[dict],
@@ -190,39 +241,18 @@ class VectorDbSession:
         """Batch insert. Each item: {id, vector, metadata?, timestamp?}.
 
         Validates dimension + schema + duplicate ids (within the batch and
-        against live rows) before anything is appended.
+        against live rows) before anything is appended; the first invalid
+        item raises and leaves the session unchanged.
         """
         if not vectors:
             return 0
         now = timestamp or _utcnow()
         seen: set[str] = set()
-        rows = []
+        rows: list[dict] = []
+        dim = self._dim
         for item in vectors:
-            vid = str(item["id"])
-            vec = [float(x) for x in item["vector"]]
-            if not vec:
-                raise VectorDbError(f"empty vector for id {vid!r}")
-            if self._dim is None:
-                self._dim = len(vec)
-            elif len(vec) != self._dim:
-                raise VectorDbError(
-                    f"dimension mismatch for id {vid!r}: got {len(vec)}, expected {self._dim}"
-                )
-            if vid in seen:
-                raise VectorDbError(f"duplicate id in batch: {vid!r}")
-            seen.add(vid)
-            md = item.get("metadata")
-            if self._schema is not None:
-                self._schema.validate_metadata(md)
-            rows.append(
-                {
-                    "id": vid,
-                    "vector": vec,
-                    "metadata": md,
-                    "ts": item.get("timestamp") or now,
-                    "deleted": False,
-                }
-            )
+            rows.append(self._validated_row(str(item["id"]), item, dim, seen, now))
+            dim = dim or len(rows[-1]["vector"])
         if self._df is not None:
             clash = (
                 self._df.filter(~F.col("deleted"))
@@ -233,14 +263,7 @@ class VectorDbSession:
             )
             if clash:
                 raise VectorDbError(f"duplicate id: {clash[0]['id']!r} already exists")
-        self._invalidate()
-        batch = self._create_batch_df(rows)
-        if self._df is None:
-            self._df = batch
-        else:
-            self._df = self._df.unionByName(batch, allowMissingColumns=True)
-        self._bound_lineage()
-        self._emit("Inserted", [r["id"] for r in rows], now)
+        self._append(rows, dim, now)
         return len(rows)
 
     def batch_add_vectors(
@@ -265,43 +288,11 @@ class VectorDbSession:
                 errors.append({"id": "?", "error": f"missing id: {e}"})
                 continue
             try:
-                vec = [float(x) for x in item["vector"]]
-                if not vec:
-                    raise VectorDbError(f"empty vector for id {vid!r}")
-                if dim is not None and len(vec) != dim:
-                    raise VectorDbError(
-                        f"dimension mismatch for id {vid!r}: got {len(vec)}, expected {dim}"
-                    )
-                if vid in seen:
-                    raise VectorDbError(f"duplicate id in batch: {vid!r}")
-                ts = item.get("timestamp") or now
-                if not isinstance(ts, _dt.datetime):
-                    # validate here, per-row: a bad-typed timestamp would
-                    # otherwise escape to createDataFrame and abort the
-                    # whole batch after state was already touched
-                    raise VectorDbError(
-                        f"timestamp for id {vid!r} must be a datetime, got {type(ts).__name__}"
-                    )
-                md = item.get("metadata")
-                if self._schema is not None:
-                    self._schema.validate_metadata(md)
+                rows.append(self._validated_row(vid, item, dim, seen, now))
             except (VectorDbError, KeyError, TypeError, ValueError) as e:
                 errors.append({"id": vid, "error": str(e)})
                 continue
-            # commit the batch dimension only once a row FULLY validates —
-            # a rejected first row must not pin the dim for later rows
-            if dim is None:
-                dim = len(vec)
-            seen.add(vid)
-            rows.append(
-                {
-                    "id": vid,
-                    "vector": vec,
-                    "metadata": md,
-                    "ts": ts,
-                    "deleted": False,
-                }
-            )
+            dim = dim or len(rows[-1]["vector"])
         if rows and self._df is not None:
             clash = {
                 r["id"]
@@ -324,16 +315,7 @@ class VectorDbSession:
                         kept.append(row)
                 rows = kept
         if rows:
-            self._dim = dim
-            self._invalidate()
-            batch = self._create_batch_df(rows)
-            self._df = (
-                batch
-                if self._df is None
-                else self._df.unionByName(batch, allowMissingColumns=True)
-            )
-            self._bound_lineage()
-            self._emit("Inserted", [r["id"] for r in rows], now)
+            self._append(rows, dim, now)
         return {"successful": len(rows), "failed": len(errors), "errors": errors}
 
     @classmethod
@@ -481,10 +463,7 @@ class VectorDbSession:
             return out
         if self._df is None:
             return []
-        if self._dim is not None and len(query_vector) != self._dim:
-            raise VectorDbError(
-                f"query dimension {len(query_vector)} != index dimension {self._dim}"
-            )
+        self._check_query_dim(query_vector)
         cache_key = QueryResultCache.key(
             [float(x) for x in query_vector], k,
             extra=json.dumps(
@@ -496,63 +475,10 @@ class VectorDbSession:
         cached = self._cache.get(cache_key)
         if cached is not None:
             return cached
-        df = self._df.filter(~F.col("deleted"))
-        cutoff = _utcnow() - _dt.timedelta(days=RECENCY_DAYS)
-        if not search_recent:
-            df = df.filter(F.col("ts") < F.lit(cutoff))
-        if not search_historical:
-            df = df.filter(F.col("ts") >= F.lit(cutoff))
-        if filter is not None:
-            # pre-filter BEFORE ranking — exact, supersedes the reference's
-            # k*3 oversampling (hybrid/core.rs:513-549)
-            df = df.filter(compile_filter(filter, df.schema, metadata_col="metadata"))
-
-        queries = self.spark.createDataFrame(
-            [("q0", [float(x) for x in query_vector])],
-            "query_id string, vector array<float>",
-        )
-        use_index = self._index is not None and self._index.is_trained and filter is None
-        if use_index:
-            if self._assigned is None:
-                self._refresh_assigned()
-            if n_probe is None:
-                # planner heuristic (search_integration.rs:375-449): probe
-                # width by dataset size and k; the live count is cached at
-                # assignment time — no count job per search
-                from fabstir_vectordb_spark.plans.tuning import plan_search
-
-                plan = plan_search(self._live_count or 0, k, self._index.n_clusters,
-                                   brute_force_threshold=0)
-                n_probe = plan.n_probe or self._index.n_clusters
-            assigned = self._assigned
-            if not search_recent:
-                assigned = assigned.filter(F.col("ts") < F.lit(cutoff))
-            if not search_historical:
-                assigned = assigned.filter(F.col("ts") >= F.lit(cutoff))
-            res = self._index.search(assigned, queries, k, n_probe=n_probe)
-        else:
-            res = brute_force_knn(df, queries, k, metric="l2", impl="expr")
-        scored = (
-            res.withColumn("score", D.similarity_score("distance"))
-            .filter(F.col("score") >= threshold)
-            .join(df.select("id", "vector", "metadata"), "id", "left")
-        )
-        rows = (
-            topk_per_query(scored, k)
-            .orderBy(F.round("distance", 6), "id")
-            .collect()
-        )
-        out = []
-        for r in rows:
-            item = {
-                "id": r["id"],
-                "distance": r["distance"],
-                "score": r["score"],
-                "metadata": _row_to_plain(r["metadata"]) if r["metadata"] is not None else None,
-            }
-            if include_vectors:
-                item["vector"] = list(r["vector"])
-            out.append(item)
+        out = self._collect_search(
+            [("q0", [float(x) for x in query_vector])], k, threshold, filter,
+            n_probe, include_vectors, search_recent, search_historical,
+        )["q0"]
         self._cache.put(cache_key, out)
         return out
 
@@ -574,60 +500,11 @@ class VectorDbSession:
         if self._df is None or not queries:
             return {str(q["id"]): [] for q in queries}
         for q in queries:
-            if self._dim is not None and len(q["vector"]) != self._dim:
-                raise VectorDbError(
-                    f"query dimension {len(q['vector'])} != index dimension {self._dim}"
-                )
-        df = self._df.filter(~F.col("deleted"))
-        if filter is not None:
-            df = df.filter(compile_filter(filter, df.schema, metadata_col="metadata"))
-        qdf = self.spark.createDataFrame(
+            self._check_query_dim(q["vector"])
+        return self._collect_search(
             [(str(q["id"]), [float(x) for x in q["vector"]]) for q in queries],
-            "query_id string, vector array<float>",
+            k, threshold, filter, n_probe=None, include_vectors=False,
         )
-        # same planner as search(): trained index + no metadata filter ->
-        # probe path over the one-time-materialized clustered table
-        use_index = (
-            self._index is not None and self._index.is_trained and filter is None
-        )
-        if use_index:
-            if self._assigned is None:
-                self._refresh_assigned()
-            from fabstir_vectordb_spark.plans.tuning import plan_search
-
-            plan = plan_search(
-                self._live_count or 0, k, self._index.n_clusters,
-                brute_force_threshold=0,
-            )
-            res = self._index.search(
-                self._assigned, qdf, k,
-                n_probe=plan.n_probe or self._index.n_clusters,
-            )
-        else:
-            res = brute_force_knn(df, qdf, k, metric="l2", impl="kernel")
-        scored = (
-            res.withColumn("score", D.similarity_score("distance"))
-            .filter(F.col("score") >= threshold)
-            .join(df.select("id", "metadata"), "id", "left")
-        )
-        rows = (
-            topk_per_query(scored, k)
-            .orderBy("query_id", F.round("distance", 6), "id")
-            .collect()
-        )
-        out: dict[str, list[dict]] = {str(q["id"]): [] for q in queries}
-        for r in rows:
-            out[r["query_id"]].append(
-                {
-                    "id": r["id"],
-                    "distance": r["distance"],
-                    "score": r["score"],
-                    "metadata": _row_to_plain(r["metadata"])
-                    if r["metadata"] is not None
-                    else None,
-                }
-            )
-        return out
 
     def search_dataframe(
         self,
@@ -654,31 +531,109 @@ class VectorDbSession:
             F.col(query_id_col).alias("query_id"),
             F.col(query_vector_col).alias("vector"),
         )
-        use_index = (
-            self._index is not None and self._index.is_trained and filter is None
-        )
-        if use_index:
+        _, res = self._route(qdf, None, k, filter, n_probe)
+        return res.withColumn("score", D.similarity_score("distance"))
+
+    def _check_query_dim(self, vector: list[float]) -> None:
+        if self._dim is not None and len(vector) != self._dim:
+            raise VectorDbError(
+                f"query dimension {len(vector)} != index dimension {self._dim}"
+            )
+
+    def _route(
+        self,
+        queries: DataFrame,
+        n_queries: int | None,
+        k: int,
+        filter: dict | None,
+        n_probe: int | None,
+        search_recent: bool = True,
+        search_historical: bool = True,
+    ) -> tuple[DataFrame, DataFrame]:
+        """The session's one query router.  Returns ``(live, res)``: the
+        candidate rows (live, recency- and filter-restricted) and the
+        (query_id, id, distance) top-k over them.
+
+        A trained index with no metadata filter probes the clustered
+        table, materialized once per mutation epoch; n_probe defaults to
+        tune_n_probe by live row count and k (search_integration.rs:
+        375-449) — the count is cached at assignment time, so there is no
+        count job per search.  Otherwise the search is exact over the
+        pre-filtered rows: filtering BEFORE ranking supersedes the
+        reference's k*3 oversampling (hybrid/core.rs:513-549).
+
+        ``n_queries`` is the size of a collected query set: one query
+        takes the declarative cross join (``impl="expr"``), more take
+        the broadcast kernel (at 10k x 128 the cross join is faster for
+        one query, the kernel from 16 up).  ``None`` means the query set
+        stays a DataFrame (search_dataframe), which needs the
+        non-collecting deliveries (``search_bulk`` / ``knn_bulk``)."""
+        cutoff = _utcnow() - _dt.timedelta(days=RECENCY_DAYS)
+        recency = []
+        if not search_recent:
+            recency.append(F.col("ts") < F.lit(cutoff))
+        if not search_historical:
+            recency.append(F.col("ts") >= F.lit(cutoff))
+        live = self._df.filter(~F.col("deleted"))
+        for pred in recency:
+            live = live.filter(pred)
+        if filter is not None:
+            live = live.filter(compile_filter(filter, live.schema, metadata_col="metadata"))
+        if self._index is not None and self._index.is_trained and filter is None:
             if self._assigned is None:
                 self._refresh_assigned()
+            assigned = self._assigned
+            for pred in recency:
+                assigned = assigned.filter(pred)
             if n_probe is None:
-                from fabstir_vectordb_spark.plans.tuning import plan_search
+                n_probe = tune_n_probe(self._live_count or 0, k, self._index.n_clusters)
+            probe = self._index.search if n_queries is not None else self._index.search_bulk
+            return live, probe(assigned, queries, k, n_probe=n_probe)
+        if n_queries is None:
+            return live, knn_bulk(live, queries, k, metric="l2")
+        impl = "expr" if n_queries == 1 else "kernel"
+        return live, brute_force_knn(live, queries, k, metric="l2", impl=impl)
 
-                plan = plan_search(
-                    self._live_count or 0, k, self._index.n_clusters,
-                    brute_force_threshold=0,
-                )
-                n_probe = plan.n_probe or self._index.n_clusters
-            res = self._index.search_bulk(self._assigned, qdf, k, n_probe=n_probe)
-        else:
-            from fabstir_vectordb_spark.operators.knn import knn_bulk
-
-            df = self._df.filter(~F.col("deleted"))
-            if filter is not None:
-                df = df.filter(
-                    compile_filter(filter, df.schema, metadata_col="metadata")
-                )
-            res = knn_bulk(df, qdf, k, metric="l2", id_col="id", vector_col="vector")
-        return res.withColumn("score", D.similarity_score("distance"))
+    def _collect_search(
+        self,
+        queries: list[tuple[str, list[float]]],
+        k: int,
+        threshold: float,
+        filter: dict | None,
+        n_probe: int | None,
+        include_vectors: bool,
+        search_recent: bool = True,
+        search_historical: bool = True,
+    ) -> dict[str, list[dict]]:
+        """The collected-query body of search() and search_batch():
+        route, score, threshold, attach metadata, per-query top-k, and
+        one collect.  Returns {query_id: [results by ascending
+        distance]}."""
+        qdf = self.spark.createDataFrame(queries, "query_id string, vector array<float>")
+        live, res = self._route(
+            qdf, len(queries), k, filter, n_probe, search_recent, search_historical
+        )
+        cols = ["id", "vector", "metadata"] if include_vectors else ["id", "metadata"]
+        scored = (
+            res.withColumn("score", D.similarity_score("distance"))
+            .filter(F.col("score") >= threshold)
+            .join(live.select(*cols), "id", "left")
+        )
+        # one global (distance, id) order is each query's order once the
+        # rows are split by query_id below
+        rows = topk_per_query(scored, k).orderBy(F.round("distance", 6), "id").collect()
+        out: dict[str, list[dict]] = {qid: [] for qid, _ in queries}
+        for r in rows:
+            item = {
+                "id": r["id"],
+                "distance": r["distance"],
+                "score": r["score"],
+                "metadata": _row_to_plain(r["metadata"]) if r["metadata"] is not None else None,
+            }
+            if include_vectors:
+                item["vector"] = list(r["vector"])
+            out[r["query_id"]].append(item)
+        return out
 
     # ------------------------------------------------------------------ get
 

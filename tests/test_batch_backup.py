@@ -20,19 +20,39 @@ def sess(spark):
     return s
 
 
-def test_search_batch_matches_single(sess):
-    batch = sess.search_batch(
-        [{"id": "qa", "vector": [0.0, 0.0]}, {"id": "qb", "vector": [9.0, 0.0]}], k=3
+def test_search_batch_matches_single(spark, sess):
+    """search_batch agrees with per-query search() across the router's
+    cases: exact and trained, unfiltered and filtered, k below and above
+    the live row count."""
+    trained = VectorDbSession(spark)
+    trained.add_vectors(
+        [
+            {"id": f"v{i}", "vector": [float(i), 0.0], "metadata": {"even": i % 2 == 0}}
+            for i in range(10)
+        ]
     )
-    assert set(batch) == {"qa", "qb"}
-    for qid, vec in (("qa", [0.0, 0.0]), ("qb", [9.0, 0.0])):
-        single = sess.search(vec, k=3)
-        assert [r["id"] for r in batch[qid]] == [r["id"] for r in single]
-        assert [r["distance"] for r in batch[qid]] == pytest.approx(
-            [r["distance"] for r in single]
+    trained.train_index(n_clusters=2)
+    assert trained._index.is_trained
+    qs = (("qa", [0.0, 0.0]), ("qb", [9.0, 0.0]))
+    even = {"even": True}
+    cases = [(sess, None, 3), (sess, even, 20), (trained, None, 3),
+             (trained, None, 20), (trained, even, 20)]
+    for s, flt, k in cases:
+        batch = s.search_batch(
+            [{"id": qid, "vector": vec} for qid, vec in qs], k=k, filter=flt
         )
+        assert set(batch) == {"qa", "qb"}
+        for qid, vec in qs:
+            single = s.search(vec, k=k, filter=flt)
+            assert len(single) == min(k, 10 if flt is None else 5)
+            assert [r["id"] for r in batch[qid]] == [r["id"] for r in single]
+            assert [r["distance"] for r in batch[qid]] == pytest.approx(
+                [r["distance"] for r in single]
+            )
+            assert [r["metadata"] for r in batch[qid]] == [r["metadata"] for r in single]
     # metadata travels
-    assert batch["qa"][0]["metadata"] == {"even": True}
+    first = sess.search_batch([{"id": "qa", "vector": [0.0, 0.0]}], k=3)["qa"][0]
+    assert first["metadata"] == {"even": True}
 
 
 def test_search_batch_filtered(sess):

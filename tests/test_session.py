@@ -62,6 +62,17 @@ def test_duplicate_id_errors(session):
         session.add_vectors([mk(100), mk(100)])
 
 
+def test_add_rejected_batch_does_not_pin_dim(spark):
+    """A batch rejected on a later row leaves an empty session empty
+    and free to take any dimension."""
+    s = VectorDbSession(spark)
+    with pytest.raises(VectorDbError, match="dimension mismatch"):
+        s.add_vectors([{"id": "a", "vector": [1.0, 2.0, 3.0]}, {"id": "b", "vector": [1.0, 2.0]}])
+    assert s.dataframe() is None
+    assert s.add_vectors([{"id": "c", "vector": [1.0, 2.0]}]) == 1
+    assert s.get_vector("c")["vector"] == [1.0, 2.0]
+
+
 def test_filtered_search(session):
     res = session.search([1.0, 1.0, 1.0, 0.0], k=10, filter={"status": "archived"})
     assert sorted(r["id"] for r in res) == ["vec-8", "vec-9"]
@@ -157,18 +168,29 @@ def test_trained_index_search(spark):
 
 def test_search_batch_uses_index_consistently(spark):
     """search_batch must agree with per-query search() on a trained
-    index — both route through the same planner and probe path."""
+    index — both route through the same router and probe path —
+    filtered or not, with k below and above the live row count; and the
+    index path honours the recency flags."""
     s = VectorDbSession(spark)
-    s.add_vectors([mk(i) for i in range(40)])
+    old_ts = dt.datetime.utcnow() - dt.timedelta(days=30)
+    s.add_vectors([mk(i, status="archived" if i % 4 == 0 else "active") for i in range(40)])
+    s.add_vectors([dict(mk(i), timestamp=old_ts) for i in range(40, 60)])
     s.train_index(n_clusters=4)
+    assert s._index.is_trained
     qs = [
         {"id": "a", "vector": [5.0, 2.0, 1.0, 0.0]},
         {"id": "b", "vector": [20.0, 1.0, 1.0, 0.0]},
     ]
-    batch = s.search_batch(qs, k=5)
-    for q in qs:
-        point = s.search(q["vector"], k=5)
-        assert [r["id"] for r in batch[q["id"]]] == [r["id"] for r in point]
+    for flt, n_live in ((None, 60), ({"status": "active"}, 50)):
+        for k in (5, 100):
+            batch = s.search_batch(qs, k=k, filter=flt)
+            for q in qs:
+                point = s.search(q["vector"], k=k, filter=flt)
+                assert len(point) == min(k, n_live)
+                assert [r["id"] for r in batch[q["id"]]] == [r["id"] for r in point]
+    # search_historical=False on the index path: only the last 7 days
+    recent = s.search([45.0, 0.0, 1.0, 0.0], k=100, search_historical=False)
+    assert sorted(r["id"] for r in recent) == sorted(f"vec-{i}" for i in range(40))
 
 
 def test_search_dataframe_matches_batch(spark):

@@ -5,7 +5,7 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
-from fabstir_vectordb_spark.plans.tuning import plan_search, tune_n_probe
+from fabstir_vectordb_spark.plans.tuning import tune_n_probe
 from fabstir_vectordb_spark.sources import vectors as V
 
 
@@ -73,33 +73,6 @@ def test_tune_n_probe_tiers():
     assert tune_n_probe(1_000_000, 10, 256) == 32     # large => eighth
     assert tune_n_probe(1_000_000, 100, 256) == 96    # big k widens probes
     assert tune_n_probe(50_000_000, 10, 256) == 16
-
-
-def test_plan_search_strategies():
-    assert plan_search(100, 10, None).strategy == "brute"
-    assert plan_search(5_000, 10, 256).strategy == "brute"
-    p = plan_search(1_000_000, 10, 256)
-    assert p.strategy == "ivf" and p.n_probe == 32
-    assert plan_search(
-        1_000_000, 10, 256, has_filter=True, filter_selectivity=0.005
-    ).strategy == "brute"
-    assert plan_search(
-        50_000_000, 10, 256, pq_available=True
-    ).strategy == "pq"
-
-
-def test_plan_search_pq_tier_consumes_tune_pq():
-    from fabstir_vectordb_spark.plans.tuning import plan_search, tune_pq
-
-    p = plan_search(
-        20_000_000, 10, 256, pq_available=True, dim=64, recall_target=0.9
-    )
-    want = tune_pq(64, 0.9, 256, dataset_size=20_000_000)
-    assert p.strategy == "pq" and p.pq == want
-    assert p.n_probe == want.n_probe and p.oversample == want.oversample
-    # without a stated target the legacy knobs stand
-    p2 = plan_search(20_000_000, 10, 256, pq_available=True)
-    assert p2.strategy == "pq" and p2.pq is None and p2.oversample == 4
 
 
 def test_tune_hnsw_tiers():
@@ -178,33 +151,6 @@ def test_tune_hnsw_plan_reaches_target_on_clusterable(spark):
     assert sum(per) / len(per) >= 0.9
 
 
-def test_plan_search_binary_tier():
-    from fabstir_vectordb_spark.plans.tuning import (
-        BINARY_SCAN_CEILING,
-        plan_search,
-        tune_binary,
-    )
-
-    # untrained + sketch available above the exact-scan comfort zone
-    # => binary, consuming tune_binary's knobs
-    p = plan_search(500_000, 10, None, binary_available=True, dim=64)
-    assert p.strategy == "binary"
-    assert p.binary == tune_binary(64, 10)
-    assert p.oversample == p.binary.oversample == 4
-    # no sketch => the old brute answer stands
-    assert plan_search(500_000, 10, None).strategy == "brute"
-    # a trained index always wins over the sketch
-    assert plan_search(500_000, 10, 256, binary_available=True).strategy == "ivf"
-    # tiny tables stay brute even with a sketch
-    assert plan_search(100, 10, None, binary_available=True).strategy == "brute"
-    # above the per-executor ceiling the plan still prefers the sketch
-    # over a raw exact scan but tells the caller to train
-    big = plan_search(
-        BINARY_SCAN_CEILING * 3, 10, None, binary_available=True, dim=64
-    )
-    assert big.strategy == "binary" and "train" in big.reason.lower()
-
-
 def test_tune_binary_knobs():
     from fabstir_vectordb_spark.plans.tuning import tune_binary
 
@@ -241,22 +187,6 @@ def test_binary_sketch_consumes_planner_default(spark):
     auto = sk.hamming_knn(sigs, qs, 5, rerank_vectors=df).collect()
     explicit = sk.hamming_knn(sigs, qs, 5, rerank_vectors=df, oversample=4).collect()
     assert sorted(map(tuple, auto)) == sorted(map(tuple, explicit))
-
-
-def test_plan_search_selective_filter_beats_binary_tier():
-    """Untrained + sketch + highly selective filter: the exact scan of
-    the pre-filtered subset is cheaper AND exact, so it wins over the
-    approximate Hamming tier (ADVICE r8 #1)."""
-    p = plan_search(
-        1_000_000, 10, None,
-        has_filter=True, filter_selectivity=0.005,
-        binary_available=True, dim=64,
-    )
-    assert p.strategy == "brute"
-    # without the filter the sketch tier still takes the untrained case
-    assert plan_search(
-        1_000_000, 10, None, binary_available=True, dim=64
-    ).strategy == "binary"
 
 
 def test_tune_range_encodes_measured_crossover(spark):
