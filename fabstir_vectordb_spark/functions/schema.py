@@ -63,18 +63,6 @@ class MetadataSchema:
             if name in md:
                 _check_value(name, md[name], spec)
 
-    def validate_many(self, rows: list[dict | None]) -> list[str]:
-        """Per-row error strings ('' = valid) — the REST batch-insert
-        per-row error contract (src/api/rest.rs:449-531)."""
-        out = []
-        for r in rows:
-            try:
-                self.validate_metadata(r)
-                out.append("")
-            except SchemaValidationError as e:
-                out.append(str(e))
-        return out
-
     # -- Spark mapping ------------------------------------------------------
 
     def spark_type(self) -> T.StructType:

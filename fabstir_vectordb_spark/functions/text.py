@@ -44,10 +44,6 @@ def token_count(text: Column | str) -> Column:
     return F.size(whitespace_tokens(text))
 
 
-def unique_token_count(text: Column | str) -> Column:
-    return F.size(F.array_distinct(whitespace_tokens(text)))
-
-
 # -- *_from variants: operate on an already-materialized token array.
 # In a multi-stat projection the plain forms re-run the regex split once
 # per stat (and once per lambda element for the HOF-based stats);

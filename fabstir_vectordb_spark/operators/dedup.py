@@ -132,35 +132,6 @@ def _shingle_table(
     return sh
 
 
-def hot_shingle_report(
-    df: DataFrame,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_shingle_freq: int | None = 1000,
-) -> DataFrame:
-    """Observability for the stop-shingle guard (no silent caps): one row
-    per shingle the cutoff would drop — (shingle, n_docs, skipped_pairs),
-    where skipped_pairs = n_docs*(n_docs-1)/2 is the candidate-join work
-    the guard avoids.  Empty result = the guard is a no-op on this
-    corpus and guarded results equal the exact all-pairs contract.
-    Run this as a side audit; the guard itself stays count-free on the
-    hot path."""
-    sh = _shingled(df, text_col, id_col, n).select(
-        "id", F.explode("__shingles").alias("shingle")
-    )
-    counts = sh.groupBy("shingle").agg(F.count("*").alias("n_docs"))
-    if max_shingle_freq is not None:
-        counts = counts.filter(F.col("n_docs") > max_shingle_freq)
-    return counts.select(
-        "shingle",
-        "n_docs",
-        (F.col("n_docs") * (F.col("n_docs") - 1) / 2).cast("long").alias(
-            "skipped_pairs"
-        ),
-    )
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     threshold: float = 0.8,

@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["evaluate_retrieval", "macro_averages"]
+__all__ = ["evaluate_retrieval"]
 
 
 def evaluate_retrieval(
@@ -137,18 +137,3 @@ def evaluate_retrieval(
         ).alias("ndcg"),
     )
 
-
-def macro_averages(per_query: DataFrame) -> DataFrame:
-    """The experiment-report line: unweighted means of
-    :func:`evaluate_retrieval`'s per-query metrics over the judged
-    queries (macro averaging — every query counts equally, the
-    trec_eval convention; micro/weighted variants derive from the
-    per-query frame directly when wanted).  One aggregate; output is
-    one row: (n_queries, recall, precision, mrr, ndcg)."""
-    return per_query.agg(
-        F.count(F.lit(1)).alias("n_queries"),
-        F.avg("recall").alias("recall"),
-        F.avg("precision").alias("precision"),
-        F.avg("mrr").alias("mrr"),
-        F.avg("ndcg").alias("ndcg"),
-    )

@@ -621,7 +621,7 @@ class HNSWIndex:
         hnsw/core.rs:418-448), so a heavily-deleted graph spends its
         beam on dead nodes and its storage on dead vectors.  Compaction
         is the HNSW analogue of the session's parquet vacuum
-        (session.py vacuum / sources/deletes.py): drop the tombstones
+        (session.py vacuum): drop the tombstones
         and re-link edges over the survivors.
 
         Guarantees: the live (id, vector) set is unchanged, so every

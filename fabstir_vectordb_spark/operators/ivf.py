@@ -20,11 +20,10 @@ partition pruning, and a broadcast (query, cluster) pair join restricts
 each query to exactly its own probe set — the reference's list-probing
 semantics, executed as a pruned scan.
 
-The HNSW graph is deliberately NOT ported (pointer-chasing ⟂ BSP); its
-observable contract — approximate top-k with high recall — is served by
-this operator, with ``probe_all`` (n_probe = n_clusters) exactly equal
-to brute force, which is both the reference's own ground-truth trick and
-our oracle hook.
+The reference's HNSW graph is a separate family here (operators/hnsw.py,
+partition-local graphs).  This operator is the session's ANN path, with
+``probe_all`` (n_probe = n_clusters) exactly equal to brute force, which
+is both the reference's own ground-truth trick and our oracle hook.
 
 Small-data mode: below ``min_training_size`` (reference: 10,
 src/hybrid/core.rs:262-269) no clustering happens and search degrades to
@@ -42,8 +41,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fabstir_vectordb_spark.functions import distance as D
-from fabstir_vectordb_spark.operators.knn import brute_force_knn
+from fabstir_vectordb_spark.operators.knn import brute_force_knn, distance_column
 from fabstir_vectordb_spark.operators.scan import cogroup_scan
 from fabstir_vectordb_spark.operators.topk import topk_per_query
 
@@ -194,6 +192,7 @@ class IVFIndex:
                 id_col=self.id_col, vector_col=self.vector_col,
                 query_id_col=query_id_col, query_vector_col=query_vector_col,
             )
+        dist = distance_column(metric, F.col(self.vector_col), F.col("__qvec"))
         n_probe = min(n_probe, self.n_clusters)
         spark = vectors_with_cluster.sparkSession
         # ONE query-set collect serves both the probe ranking and the
@@ -217,7 +216,6 @@ class IVFIndex:
             pruned[cluster_col] == probes["cluster_id"],
             "inner",
         )
-        dist = D.distance_expr(metric, F.col(self.vector_col), F.col("__qvec"))
         scored = joined.select(
             "query_id", F.col(self.id_col).alias("id"), dist.alias("distance")
         )

@@ -42,7 +42,7 @@ from fabstir_vectordb_spark.operators.topk import topk_per_query
 _METRICS = ("l2", "cosine", "dot")
 
 
-def _distance_column(metric: str, a, b) -> Column:
+def distance_column(metric: str, a, b) -> Column:
     if metric == "l2":
         return D.l2_distance(a, b)
     if metric == "cosine":
@@ -159,7 +159,7 @@ def knn_join(
         F.col(query_vector_col).alias("__qvec"),
     )
     joined = vectors.crossJoin(F.broadcast(q))
-    dist = _distance_column(metric, F.col(vector_col), F.col("__qvec"))
+    dist = distance_column(metric, F.col(vector_col), F.col("__qvec"))
     scored = joined.select(
         "query_id",
         F.col(id_col).alias("id"),
@@ -281,7 +281,7 @@ def range_search(
     v = vectors.select(
         F.col(id_col).alias("id"), F.col(vector_col).alias("__v")
     )
-    d = _distance_column(metric, F.col("__v"), F.col("__qv"))
+    d = distance_column(metric, F.col("__v"), F.col("__qv"))
     return (
         v.crossJoin(F.broadcast(q))
         .select("query_id", "id", d.alias("distance"))

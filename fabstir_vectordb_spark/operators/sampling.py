@@ -106,18 +106,6 @@ def epoch_shuffle_key(
     return _bucket(c, f"{salt}{int(epoch)}")
 
 
-def deterministic_sample(
-    df: DataFrame,
-    fraction: float,
-    id_col: str = "doc_id",
-    salt: str = "sample",
-) -> DataFrame:
-    """Keep ~``fraction`` of rows, chosen by id hash — reproducible,
-    partition-independent, and consistent across engines (unlike
-    ``DataFrame.sample``, whose output depends on partitioning)."""
-    return df.filter(sample_keep(id_col, fraction, salt))
-
-
 def cap_per_group(
     df: DataFrame,
     cap: int,

@@ -46,7 +46,6 @@ __all__ = [
     "learn_bpe",
     "bpe_word_tokens",
     "subword_token_counts",
-    "count_subword_tokens",
 ]
 
 
@@ -222,20 +221,3 @@ def subword_token_counts(
         F.coalesce(F.col(out_col), F.lit(0).cast("long")).alias(out_col),
     )
 
-
-def count_subword_tokens(
-    docs: DataFrame,
-    vocab: list[str],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    out_col: str = "n_subword",
-    lowercase: bool = True,
-) -> DataFrame:
-    """``docs`` with ``out_col`` appended — the convenience join for
-    threading subword counts into pack_sequences / mix_by_source /
-    chunking as their ``n_tokens_col``."""
-    counts = subword_token_counts(
-        docs, vocab, id_col=id_col, text_col=text_col,
-        out_col=out_col, lowercase=lowercase,
-    )
-    return docs.join(counts, id_col)

@@ -436,64 +436,3 @@ def tune_pq(
         residual=residual, reason=reason, opq=opq,
     )
 
-
-@dataclass
-class HNSWPlan:
-    """Routed-HNSW knob bundle derived from a recall target — the
-    round-5/6 routed fan-out measurements (PERFORMANCE.md "routed
-    fan-out" and "multi-assignment") encoded as DEFAULTS, the same
-    guidance-into-code contract as PQPlan."""
-
-    num_graphs: int
-    probe_graphs: int | None  # None = full fan-out (the exactness default)
-    assign_graphs: int
-    ef: int
-    reason: str
-
-
-def tune_hnsw(
-    dataset_size: int,
-    k: int,
-    recall_target: float = 0.9,
-    target_graph_size: int = 4096,
-) -> HNSWPlan:
-    """(num_graphs, probe_graphs, assign_graphs, ef) for a
-    partition-local HNSW tier aiming at ``recall_target`` recall@10.
-
-    Encodes the measured routed fan-out studies (PERFORMANCE.md):
-    full fan-out reached 0.985 recall on the ADVERSARIAL 500k fixture
-    (the exactness-leaning default); router-pruned probing at
-    R/G = 1/8 with single assignment lost boundary vectors (0.63 on
-    hostile data), and multi-assignment (assign_graphs=2, the spill
-    trick) recovered >= 0.9 at the same probe budget on clusterable
-    data.  So: any target ABOVE 0.9 keeps the full fan-out — the pruned
-    tier's evidence stops at 0.9, and a plan must never promise recall
-    its measurement doesn't cover (routing is a throughput trade,
-    never an exactness one); a target up to 0.9 prunes to G/8 WITH the
-    2x spill that makes that budget safe; a loose target (< 0.7)
-    halves the probe budget again.  ``ef`` floors at the
-    measured realistic default (64) and never below 2k so the beam
-    can hold the answer set.
-    """
-    if dataset_size < 1:
-        raise ValueError(f"dataset_size must be >= 1, got {dataset_size}")
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    if not 0.0 < recall_target <= 1.0:
-        raise ValueError(f"recall_target must be in (0, 1], got {recall_target}")
-    g = max(1, -(-dataset_size // max(target_graph_size, 1)))
-    ef = max(64, 2 * k)
-    if recall_target > 0.9:
-        return HNSWPlan(
-            num_graphs=g, probe_graphs=None, assign_graphs=1, ef=ef,
-            reason="exactness tier: full fan-out (measured 0.985 on the adversarial 500k fixture); the pruned tier's evidence stops at 0.9, so any higher target escalates here",
-        )
-    if recall_target >= 0.7:
-        return HNSWPlan(
-            num_graphs=g, probe_graphs=max(1, g // 8), assign_graphs=2, ef=ef,
-            reason="routed tier: probe G/8 with 2x spill (measured >= 0.9 at R/G = 1/8 with assign_graphs=2; 0.63 without the spill)",
-        )
-    return HNSWPlan(
-        num_graphs=g, probe_graphs=max(1, g // 16), assign_graphs=2, ef=ef,
-        reason="throughput tier: probe G/16 with 2x spill",
-    )

@@ -771,11 +771,9 @@ class VectorDbSession:
         same reason (the log is driver-side by design; use
         :meth:`deleted_ids` — a DataFrame, never collected — to feed a
         distributed audit sink instead)."""
+        empty = {"deletedCount": 0, "deletedIds": []} if return_ids else {"deletedCount": 0}
         if self._df is None:
-            return (
-                {"deletedCount": 0, "deletedIds": []}
-                if return_ids else {"deletedCount": 0}
-            )
+            return empty
         pred = compile_filter(filter, self._df.schema, metadata_col="metadata")
         match = pred & ~F.col("deleted")
         if return_ids:
@@ -785,14 +783,16 @@ class VectorDbSession:
             n = len(ids)
         else:
             n = self._df.filter(match).count()
+        if n == 0:
+            # nothing matched: the caches, the lineage and the event log stay
+            return empty
         self._invalidate()
         self._df = self._df.withColumn(
             "deleted", F.when(match, F.lit(True)).otherwise(F.col("deleted"))
         )
         self._bound_lineage()
         if return_ids:
-            if ids:
-                self._emit("Deleted", ids)
+            self._emit("Deleted", ids)
             return {"deletedCount": n, "deletedIds": ids}
         return {"deletedCount": n}
 
@@ -1123,10 +1123,6 @@ def verify_integrity(spark: SparkSession, path: str) -> dict:
 
 
 # -------------------------------------------------------------------- utils
-
-def _ddl(dtype: T.DataType) -> str:
-    return dtype.simpleString()
-
 
 def _infer_md_type(spark: SparkSession, mds: list) -> T.StructType:
     """Infer a struct type for a batch of metadata dicts via the JSON reader

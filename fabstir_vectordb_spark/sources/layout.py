@@ -38,7 +38,7 @@ could prune — the honest, engine-independent measure of layout
 quality used by tools/zorder_datum.py.
 
 Reference parity: none (the reference has no storage-layout surface);
-extension-axis with sources/vectors.py's writers.
+extension-axis.
 """
 
 from __future__ import annotations

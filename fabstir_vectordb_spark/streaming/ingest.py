@@ -1,52 +1,24 @@
-"""Structured Streaming ingest + change events (SURVEY §2.9, additive).
+"""Structured Streaming twins of the batch operators (SURVEY §2.9, additive).
 
 The reference's streaming surface is stubbed (SSE returns an empty
-stream, api/rest.rs:727-733; WebSocket 101-only, :735-738), but it
-defines the event vocabulary Inserted/Updated/Deleted/Migrated
-(src/client/rust.rs:72-88).  This module is the greenfield Spark design
-the survey calls for: ingest as a streaming append to the vectors table,
-the event feed as an output stream, and watermarked windowed aggregates
-for monitoring — all standard Structured Streaming, no custom state
-unless semantics demand it.
+stream, api/rest.rs:727-733; WebSocket 101-only, :735-738).  Vectors
+enter the engine through the session (add_vectors, from_dataframe,
+load); this module holds the streaming forms of batch operators whose
+semantics survive micro-batching: watermarked id dedup, the curation
+gate, sessionization, temporal enrichment against a static side,
+resampling, funnels, retention and rolling windows — all standard
+Structured Streaming, no custom state unless semantics demand it.
 
-Scale notes: the ingest path is append-only (no per-record upsert
-shuffle); dedup-on-ingest uses dropDuplicatesWithinWatermark on the id —
-bounded state, exactly-once per watermark window.  foreachBatch gives
-each micro-batch the full batch DataFrame API (cluster assignment,
-partitioned write) without collecting anything.
+Scale notes: dedup-on-ingest uses dropDuplicatesWithinWatermark on the
+id — bounded state, exactly-once per watermark window.  foreachBatch
+gives each micro-batch the full batch DataFrame API without collecting
+anything.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-# src/client/rust.rs:72-88
-EVENT_TYPES = ("Inserted", "Updated", "Deleted", "Migrated")
-
-VECTOR_STREAM_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.StringType(), False),
-        T.StructField("vector", T.ArrayType(T.FloatType()), False),
-        T.StructField("metadata", T.StringType(), True),  # JSON string on the wire
-        T.StructField("ts", T.TimestampType(), False),
-    ]
-)
-
-
-def read_vector_stream(
-    spark: SparkSession,
-    path: str,
-    fmt: str = "json",
-    schema: T.StructType = VECTOR_STREAM_SCHEMA,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """File-source ingest stream of vector records."""
-    reader = spark.readStream.format(fmt).schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.load(path)
 
 
 def deduped_ingest(
@@ -151,46 +123,6 @@ def curate_stream(
     return sig.withColumn("passed", verdict)
 
 
-def as_change_events(stream: DataFrame, event_type: str = "Inserted") -> DataFrame:
-    """Shape an ingest stream into the reference's event feed
-    (client/rust.rs:72-88): (event_type, vector_id, ts)."""
-    if event_type not in EVENT_TYPES:
-        raise ValueError(f"unknown event type {event_type!r}; one of {EVENT_TYPES}")
-    return stream.select(
-        F.lit(event_type).alias("event_type"),
-        F.col("id").alias("vector_id"),
-        F.col("ts"),
-    )
-
-
-def windowed_event_counts(
-    events: DataFrame,
-    window: str = "1 minute",
-    slide: str | None = None,
-    watermark: str = "2 minutes",
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-) -> DataFrame:
-    """Watermarked tumbling/sliding-window counts per event type — the
-    monitoring aggregate the reference's stats endpoints fake
-    (api/rest.rs:679-725 return zeros).  Late rows beyond the watermark
-    are dropped; state is bounded by watermark/window."""
-    win = (
-        F.window(ts_col, window, slide) if slide else F.window(ts_col, window)
-    )
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(win.alias("w"), F.col(key_col))
-        .agg(F.count("*").alias("n"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            key_col,
-            "n",
-        )
-    )
-
-
 def sessionize_stream(
     events: DataFrame,
     gap_seconds: int = 1800,
@@ -245,40 +177,6 @@ def sessionize_stream(
             "sum_value",
         )
     )
-
-
-def write_vectors_stream(
-    stream: DataFrame,
-    table_path: str,
-    checkpoint_path: str,
-    partition_assigner=None,
-    trigger_available_now: bool = True,
-):
-    """Append the ingest stream to the vectors table via foreachBatch.
-
-    `partition_assigner` (e.g. a trained IVFIndex.assign) runs per
-    micro-batch so new rows land in the right cluster partition — the
-    streaming version of the session's routed insert
-    (src/hybrid/core.rs:357-417, where routing is by age; here routing is
-    by cluster because recency is a query-time predicate in this engine).
-    """
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        out = batch_df
-        if partition_assigner is not None:
-            out = partition_assigner(batch_df)
-            out.write.mode("append").partitionBy("cluster_id").parquet(table_path)
-        else:
-            out.write.mode("append").parquet(table_path)
-
-    writer = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def _temporal_enrich_stream(
@@ -400,124 +298,6 @@ def interval_enrich_stream(
         lambda b: interval_join(b, right, **interval_kwargs),
         trigger_available_now,
     )
-
-
-def write_graph_stream(
-    stream: DataFrame,
-    hnsw_index,
-    graph_path: str,
-    checkpoint_path: str,
-    trigger_available_now: bool = True,
-):
-    """Maintain a partition-local HNSW graph under a vector stream —
-    the streaming version of the reference's recent-side insert
-    (hybrid/core.rs:374-410 routes fresh vectors into the HNSW graph).
-
-    Each micro-batch incrementally inserts its rows into the persisted
-    graph (operators/hnsw.py HNSWIndex.insert — only the affected
-    graphs' tasks do work) and publishes the result with an ATOMIC
-    pointer flip: every batch writes a fresh versioned directory
-    ``{graph_path}.v{batch_id}`` and then atomically replaces the
-    ``graph_path`` symlink (os.replace of a symlink is a single rename
-    syscall).  A query therefore sees either the old or the new complete
-    graph, never a partial write — and, unlike a rename-away/rename-in
-    dance, there is no window in which ``graph_path`` does not exist.
-    If a crash or foreachBatch retry ever finds the pointer missing
-    (e.g. mid-migration of a legacy plain directory), the sink re-links
-    the newest complete version instead of rebuilding the whole graph
-    from a single micro-batch.
-    """
-    import glob
-    import os
-    import shutil
-
-    from fabstir_vectordb_spark.operators.hnsw import read_graph, write_graph
-
-    def _versions() -> list[str]:
-        # suffix grammar: ".v{batch}" or ".v{batch}r{retry}" (see sink)
-        out = []
-        for p in glob.glob(glob.escape(graph_path) + ".v*"):
-            tag = p.rsplit(".v", 1)[1]
-            batch, _, retry = tag.partition("r")
-            try:
-                out.append(((int(batch), int(retry) if retry else 0), p))
-            except ValueError:
-                continue
-        return [p for _, p in sorted(out)]
-
-    def _relink(target: str) -> None:
-        # atomic pointer flip: symlink at a temp name, then one rename
-        lntmp = f"{graph_path}.__lntmp"
-        if os.path.lexists(lntmp):
-            os.remove(lntmp)
-        os.symlink(os.path.abspath(target), lntmp)
-        os.replace(lntmp, graph_path)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # recovery: pointer missing but complete versions exist -> re-link
-        if not os.path.lexists(graph_path):
-            vers = _versions()
-            if vers:
-                _relink(vers[-1])
-        # legacy layout (plain directory, not a pointer): migrate once.
-        # The rename gap here is covered by the recovery branch above.
-        if os.path.lexists(graph_path) and not os.path.islink(graph_path):
-            legacy = f"{graph_path}.v-1"
-            os.rename(graph_path, legacy)
-            _relink(legacy)
-        vdir = f"{graph_path}.v{batch_id}"
-        # Retry of a batch that already PUBLISHED (crash landed between
-        # the relink and the checkpoint commit): graph_path already points
-        # at one of this batch's versions — the bare ".v{batch}" OR a
-        # retry-suffixed ".v{batch}r{n}" (a prior retry of a half-written
-        # batch publishes under an r-suffix; see below) — and all older
-        # versions were pruned, so re-running the insert would duplicate
-        # every id in the batch.  The batch is idempotent-complete — skip.
-        if os.path.lexists(graph_path):
-            real = os.path.realpath(graph_path)
-            # realpath BOTH sides: an ancestor symlink anywhere in the
-            # data dir (e.g. /tmp on macOS) would otherwise make the
-            # comparison silently never match and re-insert the batch
-            vabs = os.path.realpath(vdir)
-            if real == vabs or (
-                real.startswith(vabs + "r") and real[len(vabs) + 1 :].isdigit()
-            ):
-                return
-        batch = batch_df.select(
-            F.col("id").alias(hnsw_index.id_col),
-            F.col("vector").alias(hnsw_index.vector_col),
-        )
-        if os.path.lexists(graph_path):
-            graph = read_graph(spark, graph_path)
-            updated = hnsw_index.insert(graph, batch)
-        else:
-            updated = hnsw_index.build(batch)
-        if os.path.exists(vdir):
-            # Retry of a half-written batch.  Never rmtree a directory the
-            # pointer could resolve to (checked above); write to a fresh
-            # suffixed version instead of deleting, so the currently-linked
-            # graph stays readable even if the lazy plan hasn't run yet.
-            suffix = 0
-            fresh = vdir
-            while os.path.exists(fresh):
-                suffix += 1
-                fresh = f"{vdir}r{suffix}"
-            vdir = fresh
-        write_graph(updated, vdir)
-        _relink(vdir)
-        for stale in _versions():
-            if stale != vdir:
-                shutil.rmtree(stale, ignore_errors=True)
-
-    writer = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def resample_stream(

@@ -131,24 +131,6 @@ def test_near_dup_auto_dispatch(spark, monkeypatch):
     assert got <= exact  # cluster pruning may lose recall, never precision
 
 
-def test_hot_shingle_report(spark):
-    """Guard observability: the report names exactly the shingles the
-    cutoff drops, with the candidate-pair work each would have cost."""
-    from fabstir_vectordb_spark.operators.dedup import hot_shingle_report
-
-    docs = spark.createDataFrame(
-        [(i, f"unique text {i} common footer here") for i in range(5)],
-        "doc_id long, text string",
-    )
-    # 3-shingle "common footer here" appears in all 5 docs
-    rep = {r["shingle"]: r for r in hot_shingle_report(docs, n=3, max_shingle_freq=4).collect()}
-    assert list(rep) == ["common footer here"]
-    assert rep["common footer here"]["n_docs"] == 5
-    assert rep["common footer here"]["skipped_pairs"] == 10
-    # cutoff above every frequency -> empty report -> guard is a no-op
-    assert hot_shingle_report(docs, n=3, max_shingle_freq=5).count() == 0
-
-
 # ---------------------------------------------------------------- boilerplate
 
 def test_remove_boilerplate_lines(spark):

@@ -111,31 +111,6 @@ def test_eval_plan_no_udf(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_macro_averages(spark):
-    from fabstir_vectordb_spark.operators.evaluation import (
-        evaluate_retrieval, macro_averages,
-    )
-
-    rdf = spark.createDataFrame(
-        [(0, 5, 1), (0, 6, 2), (1, 5, 1)],
-        "query_id long, id long, rank long",
-    )
-    qdf = spark.createDataFrame(
-        [(0, 5), (0, 9), (1, 7)], "query_id long, id long"
-    )
-    per = evaluate_retrieval(rdf, qdf, k=2)
-    row = macro_averages(per).first()
-    # q0: recall .5, prec .5, mrr 1, ndcg = (1/log2 2)/(1/log2 2 + 1/log2 3)
-    # q1: zeros; macro = mean over the two judged queries
-    import math
-    ndcg0 = 1.0 / (1.0 + 1 / math.log2(3))
-    assert row["n_queries"] == 2
-    assert row["recall"] == pytest.approx(0.25)
-    assert row["precision"] == pytest.approx(0.25)
-    assert row["mrr"] == pytest.approx(0.5)
-    assert row["ndcg"] == pytest.approx(ndcg0 / 2)
-
-
 def test_eval_dedupes_duplicate_pairs(spark):
     """Duplicate (query, doc) rows — in results inside the cut, or in
     qrels — must not inflate hits/recall/DCG: results keep the MIN

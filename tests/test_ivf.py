@@ -115,6 +115,20 @@ def test_search_bulk_matches_search(spark):
         bulk = idx.search_bulk(assigned, queries, 5, n_probe=n_probe)
         point = idx.search(assigned, queries, 5, n_probe=n_probe)
         assert sorted(map(key, bulk.collect())) == sorted(map(key, point.collect()))
+    # both methods take the same metrics, trained or not (the untrained
+    # index searches exactly), and agree row for row at full probe
+    small = vecs.filter("id < 8")
+    untrained = IVFIndex.fit(small, n_clusters=4, seed=1)
+    assert idx.is_trained and not untrained.is_trained
+    for ix, table in ((idx, assigned), (untrained, untrained.assign(small))):
+        for metric in ("l2", "cosine", "dot"):
+            bulk = ix.search_bulk(table, queries, 5, n_probe=4, metric=metric)
+            point = ix.search(table, queries, 5, n_probe=4, metric=metric)
+            got = sorted(map(key, bulk.collect()))
+            assert got and got == sorted(map(key, point.collect())), metric
+        for method in (ix.search_bulk, ix.search):
+            with pytest.raises(ValueError, match="unknown metric"):
+                method(table, queries, 5, n_probe=4, metric="angular")
     # sub-block splitting (the giant-cluster memory knob) must not change
     # results: top-k over block partials is exact for any partitioning
     split = idx.search_bulk(assigned, queries, 5, n_probe=4, sub_blocks=3)

@@ -6,7 +6,6 @@ from pyspark.sql import functions as F
 
 from fabstir_vectordb_spark.operators.sampling import (
     assign_split,
-    deterministic_sample,
     sample_keep,
 )
 
@@ -56,14 +55,14 @@ def test_split_custom_weights_and_validation(ids):
 
 
 def test_deterministic_sample(ids):
-    kept = deterministic_sample(ids, 0.25)
+    kept = ids.filter(sample_keep("doc_id", 0.25))
     n = kept.count()
     assert n / 10_000 == pytest.approx(0.25, abs=0.02)
     # a sample of a superset contains the sample of the subset
-    sub = deterministic_sample(ids.filter("doc_id < 1000"), 0.25)
+    sub = ids.filter("doc_id < 1000").filter(sample_keep("doc_id", 0.25))
     assert sub.count() == kept.filter("doc_id < 1000").count()
     # disjoint salts give (near-)independent draws, same salt identical
-    again = set(r["doc_id"] for r in deterministic_sample(ids, 0.25).collect())
+    again = set(r["doc_id"] for r in ids.filter(sample_keep("doc_id", 0.25)).collect())
     assert again == set(r["doc_id"] for r in kept.collect())
     with pytest.raises(ValueError):
         sample_keep("doc_id", 1.5)

@@ -33,6 +33,9 @@ def test_valid_row_passes(schema):
 def test_missing_required(schema):
     with pytest.raises(SchemaValidationError, match="MissingField: views"):
         schema.validate_metadata({"title": "t"})
+    # a missing metadata object misses every required field
+    with pytest.raises(SchemaValidationError, match="MissingField"):
+        schema.validate_metadata(None)
 
 
 def test_wrong_type(schema):
@@ -62,13 +65,6 @@ def test_extra_fields_pass(schema):
 def test_nested_object_type(schema):
     with pytest.raises(SchemaValidationError, match="author.name"):
         schema.validate_metadata({"title": "t", "views": 1, "author": {"name": 5}})
-
-
-def test_validate_many_per_row_errors(schema):
-    errs = schema.validate_many([{"title": "t", "views": 1}, {"title": "t"}, None])
-    assert errs[0] == ""
-    assert "MissingField" in errs[1]
-    assert "MissingField" in errs[2]
 
 
 def test_spark_type_mapping(schema):

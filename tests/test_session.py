@@ -355,11 +355,19 @@ def test_delete_by_metadata_scale_safe_mode(session):
     # the deletion itself happened identically to the default mode
     got = [r["id"] for r in session.deleted_ids().collect()]
     assert got == ["vec-8", "vec-9"]
-    # idempotent on already-deleted rows (they are no longer live)
+    # idempotent on already-deleted rows (they are no longer live); a
+    # delete that matches nothing keeps the backing table, so the caches
+    # built on it survive, and logs no event
+    before = session.dataframe()
+    n_events = session.mutation_events().count()
     again = session.delete_by_metadata(
         {"status": "archived"}, return_ids=False
     )
     assert again == {"deletedCount": 0}
+    again = session.delete_by_metadata({"status": "archived"})
+    assert again == {"deletedCount": 0, "deletedIds": []}
+    assert session.dataframe() is before
+    assert session.mutation_events().count() == n_events
     # empty session short-circuits in both modes
     from fabstir_vectordb_spark.session import VectorDbSession
 

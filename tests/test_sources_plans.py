@@ -1,70 +1,9 @@
-"""Sources (readers/writers) and planner-heuristic tests."""
+"""Planner-heuristic tests: the n_probe, binary-sketch and range-join
+tuners, and the operators that consume their knobs."""
 
-import json
-
-import pytest
 from pyspark.sql import functions as F
 
 from fabstir_vectordb_spark.plans.tuning import tune_n_probe
-from fabstir_vectordb_spark.sources import vectors as V
-
-
-def test_read_write_parquet_roundtrip(spark, tmp_path):
-    df = spark.createDataFrame(
-        [("a", [1.0, 2.0], None), ("b", [3.0, 4.0], '{"k": 1}')],
-        "id string, vector array<float>, metadata string",
-    )
-    V.write_vectors(df, str(tmp_path / "t"))
-    back = V.read_vectors(spark, str(tmp_path / "t"), expected_dim=2)
-    assert back.count() == 2
-    assert set(back.columns) >= {"id", "vector", "metadata", "ts", "deleted"}
-    assert V.validate_dim_uniform(back) == 2
-
-
-def test_read_json_vector_strings(spark, tmp_path):
-    p = tmp_path / "in"
-    p.mkdir()
-    with open(p / "a.json", "w") as f:
-        f.write(json.dumps({"id": "x", "vector": "[1.0, 2.0, 3.0]"}) + "\n")
-    df = V.read_vectors(spark, str(p), fmt="json")
-    row = df.collect()[0]
-    assert row["vector"] == pytest.approx([1.0, 2.0, 3.0])
-    assert row["deleted"] is False
-
-
-def test_dim_validation_fails(spark, tmp_path):
-    df = spark.createDataFrame(
-        [("a", [1.0, 2.0]), ("b", [1.0, 2.0, 3.0])], "id string, vector array<float>"
-    )
-    V.write_vectors(df, str(tmp_path / "bad"))
-    with pytest.raises(V.SchemaError):
-        V.read_vectors(spark, str(tmp_path / "bad"), expected_dim=2)
-    with pytest.raises(V.SchemaError):
-        V.validate_dim_uniform(V.read_vectors(spark, str(tmp_path / "bad")))
-
-
-def test_partitioned_write_prunes(spark, tmp_path):
-    df = spark.createDataFrame(
-        [("a", [1.0], 0), ("b", [2.0], 1), ("c", [3.0], 1)],
-        "id string, vector array<float>, cluster_id int",
-    )
-    V.write_vectors(df, str(tmp_path / "p"), partition_by=["cluster_id"])
-    back = spark.read.parquet(str(tmp_path / "p"))
-    pruned = back.filter(F.col("cluster_id") == 1)
-    assert pruned.count() == 2
-    # partition pruning is visible in the scan's partition filters
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "cluster_id" in plan
-
-
-def test_metadata_json_roundtrip(spark):
-    df = spark.createDataFrame(
-        [("a", {"k": 1, "tag": "x"})], "id string, metadata struct<k:int,tag:string>"
-    )
-    as_json = V.metadata_as_json(df)
-    assert isinstance(as_json.schema["metadata"].dataType.simpleString(), str)
-    back = V.metadata_from_json(as_json, "k int, tag string")
-    assert back.collect()[0]["metadata"]["k"] == 1
 
 
 def test_tune_n_probe_tiers():
@@ -73,82 +12,6 @@ def test_tune_n_probe_tiers():
     assert tune_n_probe(1_000_000, 10, 256) == 32     # large => eighth
     assert tune_n_probe(1_000_000, 100, 256) == 96    # big k widens probes
     assert tune_n_probe(50_000_000, 10, 256) == 16
-
-
-def test_tune_hnsw_tiers():
-    """The measured routed fan-out guidance as defaults: exactness
-    keeps full fan-out, 0.9 prunes to G/8 WITH the 2x spill, loose
-    halves the budget again; ef floors at the realistic default."""
-    import pytest
-
-    from fabstir_vectordb_spark.plans.tuning import tune_hnsw
-
-    exact = tune_hnsw(500_000, 10, recall_target=0.99)
-    assert exact.probe_graphs is None and exact.assign_graphs == 1
-    assert exact.num_graphs == 123  # ceil(500k / 4096)
-
-    # a target ABOVE the pruned tier's measured 0.9 must escalate to
-    # full fan-out — never promise recall the measurement doesn't cover
-    assert tune_hnsw(500_000, 10, recall_target=0.95).probe_graphs is None
-
-    routed = tune_hnsw(500_000, 10, recall_target=0.9)
-    assert routed.probe_graphs == 123 // 8 and routed.assign_graphs == 2
-
-    loose = tune_hnsw(500_000, 10, recall_target=0.5)
-    assert loose.probe_graphs == 123 // 16 and loose.assign_graphs == 2
-    # probe budget monotone in the recall target
-    assert loose.probe_graphs < routed.probe_graphs
-
-    assert tune_hnsw(500_000, 200, recall_target=0.9).ef == 400  # 2k floor
-    assert tune_hnsw(2_000, 10, recall_target=0.9).probe_graphs == 1
-
-    for bad in (dict(dataset_size=0), dict(k=0), dict(recall_target=0.0),
-                dict(recall_target=1.5)):
-        kw = dict(dataset_size=500_000, k=10, recall_target=0.9)
-        kw.update(bad)
-        with pytest.raises(ValueError):
-            tune_hnsw(**kw)
-
-
-def test_tune_hnsw_plan_reaches_target_on_clusterable(spark):
-    """Consumption: an index built with the 0.9-tier plan knobs reaches
-    the target on clusterable data — the same fixture the guidance was
-    measured on (tests/test_hnsw.py recovery study)."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from fabstir_vectordb_spark.operators.hnsw import HNSWIndex
-    from fabstir_vectordb_spark.operators.knn import brute_force_knn
-    from fabstir_vectordb_spark.plans.tuning import tune_hnsw
-
-    rng = np.random.RandomState(4)
-    centers = rng.normal(0, 10, size=(8, 12))
-    rows = [
-        (i, (centers[i % 8] + rng.normal(0, 0.5, 12)).tolist())
-        for i in range(1600)
-    ]
-    vec = spark.createDataFrame(rows, "id long, vector array<double>")
-    plan = tune_hnsw(1600, 10, recall_target=0.9, target_graph_size=200)
-    assert plan.num_graphs == 8 and plan.probe_graphs == 1
-    h = HNSWIndex(M=8, M0=16, ef_construction=64,
-                  num_graphs=plan.num_graphs, partitioner="kmeans",
-                  assign_graphs=plan.assign_graphs)
-    graph = h.build(vec).cache()
-    q = vec.filter(F.col("id") % 80 == 3).select(
-        F.col("id").alias("query_id"), F.col("vector").alias("vector")
-    )
-    truth = {}
-    for r in brute_force_knn(vec, q, 10, id_col="id",
-                             vector_col="vector", impl="kernel").collect():
-        truth.setdefault(r["query_id"], set()).add(r["id"])
-    got = {}
-    # the plan's OWN ef — the test must exercise the knobs it certifies
-    for r in h.search_bulk(graph, q, 10, ef=plan.ef,
-                           probe_graphs=plan.probe_graphs).collect():
-        got.setdefault(r["query_id"], set()).add(r["id"])
-    graph.unpersist()
-    per = [len(got.get(kq, set()) & truth[kq]) / 10 for kq in truth]
-    assert sum(per) / len(per) >= 0.9
 
 
 def test_tune_binary_knobs():

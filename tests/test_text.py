@@ -33,7 +33,7 @@ def test_lang_id(df):
 
 def test_token_counts(df):
     out = {r["id"]: (r["n"], r["u"]) for r in df.select(
-        "id", X.token_count("text").alias("n"), X.unique_token_count("text").alias("u")
+        "id", X.token_count("text").alias("n"), X.unique_token_count_from(X.whitespace_tokens("text")).alias("u")
     ).collect()}
     assert out[0] == (12, 11)  # 'the' twice
     assert out[7] == (1, 1)
